@@ -61,6 +61,7 @@ lineage truncation, same lazy contract, HDFS-durable blocks.
 
 from __future__ import annotations
 
+import re
 import threading
 
 from pyspark.sql import DataFrame
@@ -74,6 +75,12 @@ BROADCAST_KEY = "spark.sql.autoBroadcastJoinThreshold"
 RELIABLE_KEY = "spark.sql.graft.checkpoint.reliable"
 
 _FLIP_LOCK = threading.Lock()
+
+# A broadcast hint in an optimized logical plan string: on a Join it
+# prints as `leftHint=(strategy=broadcast)` / `rightHint=(...)`, and an
+# uneliminated hint as a `ResolvedHint` node. Anchored to that syntax so
+# a string literal such as 'strategy=broadcast' does not match.
+_BROADCAST_HINT = re.compile(r"Hint=\(strategy=broadcast|^[\s:|+-]*ResolvedHint\b", re.M)
 
 
 def inline_rows(spark, rows, cols) -> DataFrame:
@@ -92,7 +99,11 @@ def inline_rows(spark, rows, cols) -> DataFrame:
     ``cols`` is ``[(name, sql_type), ...]``; values pass through
     ``F.lit(v).cast(sql_type)``, so ints/floats/strings/None keep
     exactly the types the old ``createDataFrame(rows, schema)`` gave.
+    No rows gives an empty frame of the same types (an empty literal
+    array would be ``array<void>``, which fails analysis).
     """
+    if not rows:
+        return spark.createDataFrame([], ", ".join(f"`{n}` {t}" for n, t in cols))
     structs = [
         F.struct(
             *[
@@ -133,8 +144,8 @@ def lazy_local_checkpoint(df: DataFrame, reliable: bool | None = None) -> DataFr
             # flip cannot neutralize; a hinted BroadcastHashJoin would
             # submit its broadcast-collect job from doExecute during the
             # conversion. Checked on the OPTIMIZED LOGICAL plan, where a
-            # surviving hint prints as `strategy=broadcast` on the Join
-            # (or as an uneliminated ResolvedHint). The physical plan is
+            # surviving hint prints on the Join (or as an uneliminated
+            # ResolvedHint node), see _BROADCAST_HINT. The physical plan is
             # deliberately NOT scanned: BroadcastExchange nodes inside
             # persisted subtrees (InMemoryRelation cached plans, planned
             # earlier under normal confs) print there too but execute
@@ -142,7 +153,7 @@ def lazy_local_checkpoint(df: DataFrame, reliable: bool | None = None) -> DataFr
             # them false-positives every operator that reads a persisted
             # frame (found immediately by the r13 baseline bench run).
             plan = df._jdf.queryExecution().optimizedPlan().toString()
-            if "strategy=broadcast" in plan or "ResolvedHint" in plan:
+            if _BROADCAST_HINT.search(plan):
                 raise RuntimeError(
                     "lazy_local_checkpoint: subtree carries an explicit "
                     "broadcast hint, which disabled auto-broadcast cannot "

@@ -28,13 +28,18 @@ guarantees uniqueness only, so this is contract-preserving).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..schemas import (
     DIM_LOCATION_KEY_COLS,
     DIM_SOIL_KEY_COLS,
     DIM_WEATHER_KEY_COLS,
+    dim_location_schema,
+    dim_soil_schema,
+    dim_time_schema,
+    dim_weather_schema,
+    fact_schema,
 )
 
 EPOCH_FALLBACK = "1970-01-01 00:00:00.000"
@@ -48,6 +53,15 @@ WEATHER_RENAMES = [
     ("weather_rain", "rain"),
     ("weather_surface_pressure", "surface_pressure"),
 ]
+
+# Star table -> its declared schema.
+STAR_SCHEMAS = {
+    "dim_location": dim_location_schema,
+    "dim_time": dim_time_schema,
+    "dim_soil": dim_soil_schema,
+    "dim_weather": dim_weather_schema,
+    "fact_sensor_readings": fact_schema,
+}
 
 
 def _assign_keys(
@@ -244,47 +258,26 @@ def incremental_load(
     staging_batch: DataFrame,
     existing: dict[str, DataFrame] | None = None,
     dense_keys: bool = False,
-    cache_handle_out: list[DataFrame] | None = None,
-    use_watermark: bool = True,
 ) -> dict[str, DataFrame]:
-    """One incremental load cycle (SURVEY §3.3), batch or foreachBatch.
+    """One incremental load cycle (SURVEY §3.3), in memory.
 
     Returns the *new* rows per table: append each to its warehouse
     location. ``existing`` maps table name -> current contents (omit on
     first load). Dims must be appended before reading them back for the
     fact join; here the returned dims are unioned with existing in-plan
     so the caller gets a consistent view without a write barrier.
-
-    ``use_watermark``: the T4 MAX(full_date) filter exists so the Glue
-    job's full-table re-SCANS of staging stay incremental
-    (s3-to-redshift.py:27-41) — it doubles as a LATE-DATA DROP. A
-    foreachBatch caller's input is already exactly the new deliveries
-    and its evt_id anti-join already guarantees exactly-once, so the
-    streaming loader passes ``use_watermark=False`` (round 10): a
-    late/out-of-order batch then loads instead of silently vanishing —
-    strictly better than composing the Glue semantics per micro-batch
-    (the 100-batch soak measured whole batches lost to watermark races
-    under out-of-order file arrival). The epoch-filter's incidental
-    NULL-timestamp rejection is kept explicitly.
+    Loaders that write to disk use :func:`append_star` instead.
 
     The filtered batch is persisted (it feeds 4 dim builds + the fact
-    join). Long-running callers (foreachBatch loops) should pass
-    ``cache_handle_out`` and ``unpersist()`` the appended handle after
-    materializing the outputs, or cached blocks accumulate in executor
-    storage; one-shot callers can rely on LRU eviction.
+    join); one-shot callers rely on LRU eviction.
     """
     existing = existing or {}
-    if use_watermark:
-        new_data = watermark_filter(
-            staging_batch, existing.get("fact_sensor_readings")
-        )
-    else:
-        new_data = staging_batch.filter(F.col("timestamp").isNotNull())
+    new_data = watermark_filter(
+        staging_batch, existing.get("fact_sensor_readings")
+    )
     # Reused 4x (dims) + 1x (fact) — cache instead of recomputing the
     # scan+filter five times (the reference recomputes, SURVEY §4).
     new_data = new_data.persist()
-    if cache_handle_out is not None:
-        cache_handle_out.append(new_data)
 
     loc_new = new_dim_location(new_data, existing.get("dim_location"), dense_keys)
     time_new = new_dim_time(new_data, existing.get("dim_time"))
@@ -310,3 +303,53 @@ def incremental_load(
         "dim_weather": weather_new,
         "fact_sensor_readings": fact_new,
     }
+
+
+def read_star_table(spark: SparkSession, star_dir: str, name: str) -> DataFrame:
+    """``star_dir/name`` with its declared schema: no footer-inference job."""
+    return spark.read.schema(STAR_SCHEMAS[name]()).parquet(f"{star_dir}/{name}")
+
+
+def append_star(
+    staging: DataFrame, star_dir: str, existing: dict[str, DataFrame]
+) -> None:
+    """Append one batch to the star under ``star_dir/<table>`` in the
+    Glue job's order (s3-to-redshift.py:80-190): each dim's new rows,
+    then the fact joined against the dims as written, read back after
+    their appends. The fact thus carries the stored surrogate keys, and
+    its write does not re-run the new-dim plans (distinct, anti-join,
+    max key, ``monotonically_increasing_id``) as an in-plan union would.
+
+    ``existing`` maps table name -> its contents before this batch;
+    its ``fact_sensor_readings`` sets the ``fact_id`` offset.
+
+    No T4 watermark: the caller's evt_id anti-join already makes the
+    load exactly-once, and the watermark would drop late or out-of-order
+    batches (the 100-batch soak lost whole batches to it). Its
+    NULL-timestamp rejection is kept.
+    """
+    spark = staging.sparkSession
+    # Reused by the four dim builds and the fact join.
+    new_data = staging.filter(F.col("timestamp").isNotNull()).persist()
+    try:
+        new_rows = {
+            "dim_location": new_dim_location(new_data, existing.get("dim_location")),
+            "dim_time": new_dim_time(new_data, existing.get("dim_time")),
+            "dim_soil": new_dim_soil(new_data, existing.get("dim_soil")),
+            "dim_weather": new_dim_weather(new_data, existing.get("dim_weather")),
+        }
+        stored = {}
+        for name, rows in new_rows.items():
+            rows.write.mode("append").parquet(f"{star_dir}/{name}")
+            stored[name] = read_star_table(spark, star_dir, name)
+        fact = build_fact(
+            new_data,
+            stored["dim_location"],
+            stored["dim_weather"],
+            stored["dim_soil"],
+            stored["dim_time"],
+            existing_fact=existing.get("fact_sensor_readings"),
+        )
+        fact.write.mode("append").parquet(f"{star_dir}/fact_sensor_readings")
+    finally:
+        new_data.unpersist()

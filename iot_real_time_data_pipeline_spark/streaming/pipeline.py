@@ -15,11 +15,15 @@ which the reference lacks) -> per-micro-batch:
 - dead-letter parquet sink (S6), partitioned by error class, carrying
   the error message + source sequence (lamda.py:488-530);
 - throttled alert sink (S7) — appended to an alerts table;
-- incremental star-schema load (S10/T4) appending dims + fact.
+- incremental star-schema load (S10) appending the new dim rows, then
+  the fact joined against the dims as written (``append_star``).
 
-Checkpointing gives exactly-once micro-batch replay; the watermark
-filter inside ``incremental_load`` additionally guards against
-reprocessing on restart (same belt-and-braces the reference runs).
+Checkpointing gives exactly-once micro-batch replay; the evt_id
+anti-join against the stored fact keeps a replayed batch out of the
+lake and the star.
+
+History is read once per batch, each star table with its declared
+schema, so the reads launch no footer-inference job.
 
 Scale notes: every per-batch step is a narrow map or a key-bounded
 join; the lake write shuffles only to coalesce output files. State on
@@ -36,7 +40,7 @@ from pyspark.sql import functions as F
 from ..functions.alerts import with_alerts
 from ..functions.validation import attach_validation_arrays
 from ..operators.pipeline import exploded_alerts, flat_lake_row, process_events, route
-from ..operators.star_schema import incremental_load
+from ..operators.star_schema import STAR_SCHEMAS, append_star, read_star_table
 from ..sources.events import read_raw_events_stream
 from .throttle import throttle_batch_window
 
@@ -48,13 +52,10 @@ def _append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = N
     writer.parquet(path)
 
 
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    if not os.path.exists(path):
+def _read_or_none(spark: SparkSession, star_dir: str, name: str) -> DataFrame | None:
+    if not os.path.exists(f"{star_dir}/{name}"):
         return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — empty dir on first batch
-        return None
+    return read_star_table(spark, star_dir, name)
 
 
 def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
@@ -92,10 +93,20 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
         try:
             routed = route(processed)
 
+            # The star as it stands before this batch, each table read
+            # once: the fact feeds both the anti-join below and the new
+            # fact_ids' offset.
+            star_dir = f"{warehouse_dir}/star"
+            existing = {
+                name: df
+                for name in STAR_SCHEMAS
+                if (df := _read_or_none(spark, star_dir, name)) is not None
+            }
+
             # T5 — idempotency: batch-internal dedup, then anti-join
             # against facts already loaded (replayed batches drop out).
             lake = routed["lake"].dropDuplicates(["event_id"])
-            existing_fact = _read_or_none(spark, f"{warehouse_dir}/star/fact_sensor_readings")
+            existing_fact = existing.get("fact_sensor_readings")
             if existing_fact is not None:
                 lake = lake.join(
                     existing_fact.select(F.col("evt_id").alias("event_id")),
@@ -154,29 +165,11 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
                             ["error_type"])
             alerts.unpersist()
 
-            # S10/T4 — star-schema incremental append.
+            # S10 — star-schema append: dims, then the fact against
+            # the dims as written.
             from ..operators.pipeline import to_staging
 
-            staging = to_staging(lake)
-            existing = {
-                name: df
-                for name in ["dim_location", "dim_time", "dim_soil",
-                             "dim_weather", "fact_sensor_readings"]
-                if (df := _read_or_none(spark, f"{warehouse_dir}/star/{name}")) is not None
-            }
-            handles: list[DataFrame] = []
-            # use_watermark=False: this batch is already exactly the
-            # new deliveries and the evt_id anti-join above guarantees
-            # exactly-once; the T4 watermark would silently drop late /
-            # out-of-order arrivals (see incremental_load's docstring).
-            new_tables = incremental_load(
-                staging, existing=existing or None, dense_keys=False,
-                cache_handle_out=handles, use_watermark=False,
-            )
-            for name, df in new_tables.items():
-                _append_parquet(df, f"{warehouse_dir}/star/{name}")
-            for h in handles:
-                h.unpersist()
+            append_star(to_staging(lake), star_dir, existing)
             lake.unpersist()
         finally:
             flagged.unpersist()

@@ -2836,6 +2836,9 @@ def test_fused_mm_stages_match_unfused_composition(spark):
     plan = MM.bmp_resize_features_from_ids(docs)._jdf.queryExecution(
     ).executedPlan().toString()
     assert plan.count("MapInPandas") == 1
+
+
+def test_label_diversity_matches_numpy_pairwise_mean(spark):
     """The algebraic (||Σu||² − n)/(n(n−1)) identity must equal the
     brute-force mean pairwise cosine to quantization precision."""
     import itertools

@@ -64,6 +64,18 @@ def test_lazy_local_checkpoint_rejects_explicit_broadcast_hint(spark):
     assert spark.conf.get(PU.AQE_KEY) == "true"
 
 
+def test_lazy_local_checkpoint_ignores_hint_text_in_string_literal(spark):
+    """The hint guard matches the plan's hint syntax, not the bare text:
+    a filter on the literal 'strategy=broadcast' carries no hint and
+    must checkpoint normally."""
+    df = spark.range(20).filter(
+        F.concat(F.lit("k"), F.col("id").cast("string")) != "strategy=broadcast"
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "strategy=broadcast" in plan  # the text a bare substring test trips on
+    assert PU.lazy_local_checkpoint(df).count() == 20
+
+
 def test_lazy_local_checkpoint_tolerates_persisted_broadcast_subtree(spark):
     """A persisted subtree whose CACHED physical plan embeds a
     BroadcastExchange (planned earlier under normal confs) must NOT
@@ -106,6 +118,17 @@ def test_lazy_local_checkpoint_reliable_path(spark, tmp_path):
         assert sorted(map(tuple, ck2.collect())) == expect
     finally:
         spark.conf.unset(PU.RELIABLE_KEY)
+
+
+def test_inline_rows_empty_is_typed_empty_frame(spark):
+    """No rows gives an empty frame with the declared column types, one
+    that downstream plans can analyze (not an ``array<void>`` explode)."""
+    cols = [("k", "long"), ("name", "string"), ("w", "double")]
+    empty = PU.inline_rows(spark, [], cols)
+    one = PU.inline_rows(spark, [(1, "a", 0.5)], cols)
+    assert empty.dtypes == one.dtypes == [("k", "bigint"), ("name", "string"), ("w", "double")]
+    assert empty.count() == 0
+    assert spark.range(3).withColumnRenamed("id", "k").join(empty, "k").count() == 0
 
 
 def test_read_table_memo_same_session_same_plan(spark):

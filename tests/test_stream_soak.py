@@ -12,9 +12,9 @@ mtime order, not event-time order), same sink-eligible lake rows,
 same dim natural keys, same dead-letter classes. Checkpoint /
 idempotency drift, double-applied batches, watermark races (the
 round-10 finding: composing the Glue T4 watermark per micro-batch
-silently dropped whole out-of-order batches — foreachBatch now runs
-with use_watermark=False), or dim upserts that stop deduplicating
-against disk all break the equality.
+silently dropped whole out-of-order batches — the foreachBatch star
+step, ``append_star``, runs without it), or dim upserts that stop
+deduplicating against disk all break the equality.
 
 Delivery-log tiers are asserted as EXACT delivery counts rather than
 set equality: INVALID lake rows, dead letters, and CRITICAL alerts

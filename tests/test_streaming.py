@@ -457,6 +457,57 @@ def test_stream_end_to_end(spark, tmp_path):
     assert dim_loc.count() == 1  # loc_1 appended once across batches
 
 
+def test_loader_job_budget_and_fact_keys_on_disk(spark, tmp_path):
+    """A steady-state micro-batch (the star already on disk) stays within
+    40 Spark jobs: history is read with declared schemas and the fact is
+    built from the dims as written, not from an in-plan union that
+    re-runs every new-dim plan. Every fact row the batch appends joins
+    all four stored dims on its surrogate keys."""
+    from iot_real_time_data_pipeline_spark.generator import generate_events
+    from iot_real_time_data_pipeline_spark.sources.events import parse_raw_payloads
+    from iot_real_time_data_pipeline_spark.streaming.pipeline import (
+        foreach_batch_loader,
+    )
+
+    payloads = [e["raw"] or "not-json" for e in generate_events(n=80, seed=11)]
+
+    def batch(lines):
+        return parse_raw_payloads(
+            spark.createDataFrame([(p,) for p in lines], ["value"]), "value"
+        )
+
+    wh = str(tmp_path / "wh")
+    fact_path = f"{wh}/star/fact_sensor_readings"
+    load = foreach_batch_loader(wh)
+    load(batch(payloads[:40]), 0)
+    before = [r.evt_id for r in spark.read.parquet(fact_path).select("evt_id").collect()]
+    second = batch(payloads[40:])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("loader-budget", "second micro-batch")
+    try:
+        load(second, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("loader-budget")
+    assert 0 < len(jobs) <= 40, f"{len(jobs)} jobs in one micro-batch"
+
+    added = spark.read.parquet(fact_path).filter(~F.col("evt_id").isin(before))
+    n_added = added.count()
+    assert n_added > 0
+    joined = added
+    for dim, key in [
+        ("dim_location", "location_key"),
+        ("dim_weather", "weather_key"),
+        ("dim_soil", "soil_key"),
+        ("dim_time", "full_date"),
+    ]:
+        joined = joined.join(spark.read.parquet(f"{wh}/star/{dim}").select(key), key)
+    # one match per dim: no orphan keys and no duplicated stored keys
+    assert joined.count() == n_added
+
+
 def test_session_window_streaming(spark, tmp_path):
     """T6 extension — gap-based event-time session windows."""
     from iot_real_time_data_pipeline_spark.operators.pipeline import process_events
