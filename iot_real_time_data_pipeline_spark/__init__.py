@@ -21,7 +21,7 @@ Layout
 - ``sources/``      : batch/streaming readers, dead-letter routing, weather
                       enrichment lookup join
 - ``streaming/``    : Structured Streaming wrap (foreachBatch sinks + star
-                      load) + stateful alert throttle (applyInPandasWithState)
+                      load) + alert throttle, exact across micro-batches
 - ``driver_queries``/``llm_queries``: the oracle-checked query registry
   exposed through ``__spark_entry__.py``
 """

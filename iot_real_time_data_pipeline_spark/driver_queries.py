@@ -233,13 +233,13 @@ def q_alerts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_throttled_alert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2 (batch form) — alert throttle: ≤1 send per (loc_id, type) per
-    5-min window, CRITICAL bypass. The exact greedy stateful variant
-    runs in streaming (streaming.throttle); this window-aligned batch
-    form is SQL-expressible and oracle-checked."""
-    from .streaming.throttle import throttle_batch_window
+    """T2 — alert sends per (alert_type, priority) through the throttle
+    the streaming loader runs (``throttle_sends``): ≤1 non-critical send
+    per (loc_id, type) per 5 minutes after the last send, CRITICAL
+    bypass."""
+    from .streaming.throttle import throttle_sends
 
-    sent = throttle_batch_window(exploded_alerts(iot_processed(spark, sf_dir)))
+    sent = throttle_sends(exploded_alerts(iot_processed(spark, sf_dir)))
     return sent.groupBy("alert_type", "priority").agg(
         F.count("*").alias("n_sent")
     )
@@ -248,12 +248,10 @@ def q_throttled_alert_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_throttled_alerts_stateful_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """T2 (exact greedy form) — batch replay of the STATEFUL throttle
-    semantics (CRITICAL bypass refreshing last_sent; non-critical
-    suppressed within 5 minutes of the last send; greedy, not
-    window-aligned), per-key counters out. Driver-visible evidence for
-    the ``applyInPandasWithState`` path, which only runs in streaming
-    tests (VERDICT r8 item 7)."""
+    """T2 — the same greedy throttle (CRITICAL bypass refreshing the last
+    send; non-critical suppressed within 5 minutes of the last send; not
+    window-aligned), per-key counters out (``throttle_stateful_replay``,
+    built on the fold ``throttle_sends`` runs)."""
     from .streaming.throttle import throttle_stateful_replay
 
     return throttle_stateful_replay(
@@ -430,6 +428,40 @@ def iot_queries() -> dict[str, QueryFn]:
 # ---------------------------------------------------------------------------
 
 
+# Greedy alert throttle replayed as a recursive CTE, appended to the
+# alerts oracle prefix: each iteration advances every key by one alert
+# (rn -> rn+1), carrying last_sent — the sequential fold window
+# functions cannot express. `ordered` is MATERIALIZED so the alerts
+# pipeline runs once, not once per iteration. Epoch math in DOUBLE
+# matches Spark's CAST(ts AS DOUBLE) bit-for-bit. The interval is
+# interpolated from the same constant the Spark side reads
+# (streaming.throttle.ALERT_INTERVAL_SECONDS), so the two sides cannot
+# silently desynchronize.
+_GREEDY_REPLAY_CTE = f""", ordered AS MATERIALIZED (
+                 SELECT loc_id, alert_type, timestamp AS ts, priority,
+                        row_number() OVER (PARTITION BY loc_id, alert_type
+                          ORDER BY timestamp, event_id, priority) AS rn
+                 FROM alerts
+               ),
+               replay AS (
+                 SELECT loc_id, alert_type, rn, ts, priority,
+                        TRUE AS sent, epoch(ts) AS last_sent
+                 FROM ordered WHERE rn = 1
+                 UNION ALL
+                 SELECT o.loc_id, o.alert_type, o.rn, o.ts, o.priority,
+                        (o.priority = 'CRITICAL'
+                         OR epoch(o.ts) - r.last_sent
+                            >= {float(_ALERT_INTERVAL)!r}) AS sent,
+                        CASE WHEN o.priority = 'CRITICAL'
+                                  OR epoch(o.ts) - r.last_sent
+                                     >= {float(_ALERT_INTERVAL)!r}
+                             THEN epoch(o.ts) ELSE r.last_sent END AS last_sent
+                 FROM ordered o JOIN replay r
+                   ON o.loc_id = r.loc_id AND o.alert_type = r.alert_type
+                  AND o.rn = r.rn + 1
+               )"""
+
+
 def _action_case() -> str:
     from .functions.alerts import DEFAULT_ACTION, RECOMMENDED_ACTIONS
 
@@ -489,55 +521,17 @@ def iot_oracle_sql() -> dict[str, str]:
             f"SELECT DISTINCT alert_type, {_action_case()} AS action FROM alerts",
             alerts=True,
         ),
-        # time_bucket's 2000-01-01 origin is 5-min aligned with Spark's
-        # epoch-aligned tumbling window, so the buckets coincide.
         "throttled_alert_counts": wp(
-            """SELECT alert_type, priority, COUNT(*) AS n_sent FROM (
-                 SELECT alert_type, priority FROM alerts WHERE priority = 'CRITICAL'
-                 UNION ALL
-                 SELECT alert_type, priority FROM (
-                   SELECT alert_type, priority, row_number() OVER (
-                     PARTITION BY loc_id, alert_type,
-                       time_bucket(INTERVAL '5 minutes', timestamp)
-                     ORDER BY timestamp, event_id) AS rn
-                   FROM alerts WHERE priority <> 'CRITICAL')
-                 WHERE rn = 1
-               ) GROUP BY 1, 2""",
+            _GREEDY_REPLAY_CTE
+            + """
+               SELECT alert_type, priority, COUNT(*) AS n_sent
+               FROM replay WHERE sent GROUP BY 1, 2""",
             alerts=True,
+            recursive=True,
         ),
-        # Greedy stateful throttle replayed as a recursive CTE: each
-        # iteration advances every key by one alert (rn -> rn+1),
-        # carrying last_sent — the sequential fold window functions
-        # cannot express. `ordered` is MATERIALIZED so the alerts
-        # pipeline runs once, not once per iteration. Epoch math in
-        # DOUBLE matches Spark's CAST(ts AS DOUBLE) bit-for-bit. The
-        # interval is interpolated from the same constant the Spark
-        # twin reads (streaming.throttle.ALERT_INTERVAL_SECONDS), so
-        # the two sides cannot silently desynchronize.
         "throttled_alerts_stateful_replay": wp(
-            f""", ordered AS MATERIALIZED (
-                 SELECT loc_id, alert_type, timestamp AS ts, priority,
-                        row_number() OVER (PARTITION BY loc_id, alert_type
-                          ORDER BY timestamp, event_id, priority) AS rn
-                 FROM alerts
-               ),
-               replay AS (
-                 SELECT loc_id, alert_type, rn, ts, priority,
-                        TRUE AS sent, epoch(ts) AS last_sent
-                 FROM ordered WHERE rn = 1
-                 UNION ALL
-                 SELECT o.loc_id, o.alert_type, o.rn, o.ts, o.priority,
-                        (o.priority = 'CRITICAL'
-                         OR epoch(o.ts) - r.last_sent
-                            >= {float(_ALERT_INTERVAL)!r}) AS sent,
-                        CASE WHEN o.priority = 'CRITICAL'
-                                  OR epoch(o.ts) - r.last_sent
-                                     >= {float(_ALERT_INTERVAL)!r}
-                             THEN epoch(o.ts) ELSE r.last_sent END AS last_sent
-                 FROM ordered o JOIN replay r
-                   ON o.loc_id = r.loc_id AND o.alert_type = r.alert_type
-                  AND o.rn = r.rn + 1
-               )
+            _GREEDY_REPLAY_CTE
+            + """
                SELECT loc_id, alert_type,
                       CAST(count(*) FILTER (WHERE sent) AS BIGINT) AS n_sent,
                       CAST(count(*) FILTER (WHERE sent AND priority = 'CRITICAL')

@@ -5,8 +5,8 @@ below is made for the 1000-executor / 100 TB target:
 
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic broadcast conversion replace hand-tuned shuffle counts.
-- Arrow on: the few Pandas-UDF operators (stateful throttle, multimodal
-  decode) move data in columnar batches, not pickled rows.
+- Arrow on: the few Pandas-UDF operators (multimodal decode) move data
+  in columnar batches, not pickled rows.
 - ``spark.sql.shuffle.partitions`` defaults to a small value locally but
   AQE coalescing makes the initial number mostly irrelevant; at cluster
   scale you'd set it ~2-3x total cores and let AQE coalesce down.

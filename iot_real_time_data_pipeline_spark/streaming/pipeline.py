@@ -14,7 +14,10 @@ which the reference lacks) -> per-micro-batch:
   from the throttle output (lamda.py:465-471);
 - dead-letter parquet sink (S6), partitioned by error class, carrying
   the error message + source sequence (lamda.py:488-530);
-- throttled alert sink (S7) — appended to an alerts table;
+- throttled alert sink (S7) — appended to an alerts table, which is
+  also the throttle's state: each batch's alerts fold on from every
+  key's latest stored send (``throttle_sends``), so the throttle is
+  exact across micro-batches that arrive in event-time order;
 - incremental star-schema load (S10) appending the new dim rows, then
   the fact joined against the dims as written (``append_star``).
 
@@ -26,8 +29,9 @@ History is read once per batch, each star table with its declared
 schema, so the reads launch no footer-inference job.
 
 Scale notes: every per-batch step is a narrow map or a key-bounded
-join; the lake write shuffles only to coalesce output files. State on
-the throttle path is one tuple per (loc_id, alert_type).
+join; the lake write shuffles only to coalesce output files. The
+throttle's carried state is one timestamp per (loc_id, alert_type),
+reduced map-side from the alerts sink before its shuffle.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ from ..functions.validation import attach_validation_arrays
 from ..operators.pipeline import exploded_alerts, flat_lake_row, process_events, route
 from ..operators.star_schema import STAR_SCHEMAS, append_star, read_star_table
 from ..sources.events import read_raw_events_stream
-from .throttle import throttle_batch_window
+from .throttle import THROTTLE_OUTPUT_SCHEMA, throttle_sends
 
 
 def _append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -115,12 +119,18 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
                 )
             lake = lake.persist()
 
-            # S7 — throttled alerts (batch-window approximation inside
-            # foreachBatch; the exact stateful variant runs stream-level,
-            # see throttle_alerts_stateful). Computed before the lake
+            # S7 — throttled alerts: the alerts sink, read with its
+            # declared schema before this batch appends, carries each
+            # key's last send into the fold. Computed before the lake
             # write so sent alerts can be joined back onto lake rows.
-            alerts = throttle_batch_window(exploded_alerts(lake)).persist()
-            _append_parquet(alerts, f"{warehouse_dir}/alerts")
+            alerts_dir = f"{warehouse_dir}/alerts"
+            history = (
+                spark.read.schema(THROTTLE_OUTPUT_SCHEMA).parquet(alerts_dir)
+                if os.path.exists(alerts_dir)
+                else None
+            )
+            alerts = throttle_sends(exploded_alerts(lake), history).persist()
+            _append_parquet(alerts, alerts_dir)
 
             # alerts_sent write-back (lamda.py:465-471): each lake row
             # learns which of its alerts actually cleared the throttle.

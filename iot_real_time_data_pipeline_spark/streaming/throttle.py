@@ -1,49 +1,42 @@
-"""Stateful alert throttle (reference T2/T3, ``Lambda/lamda.py:246-283``).
+"""Alert throttle (reference T2, ``Lambda/lamda.py:246-283``).
 
-Semantics, per key ``(loc_id, alert_type)``:
+Semantics, per key ``(loc_id, alert_type)``, in (timestamp, event_id)
+order:
 
-- CRITICAL alerts always send (bypass, lamda.py:257-261);
-- otherwise an alert is suppressed if one was sent for the same key less
-  than ALERT_INTERVAL (5 min) earlier (lamda.py:264-269);
-- a consecutive-hit counter gates the first send; the reference ships
-  CONSECUTIVE_RECORDS_THRESHOLD = 1 (lamda.py:21), making the counter
-  vestigial — the throttle is purely time-based. We keep the counter so
-  the threshold is configurable, defaulting to the reference's 1.
-- state TTL: the reference purges entries older than 1 h with
-  probability 0.1 per invocation (lamda.py:402-416); the state-store
-  timeout makes that deterministic, which is strictly better — and
-  with the default event-time timeout (round 4), eviction is pinned to
-  the watermark, so replays evict at the same stream position as live.
+- CRITICAL alerts always send, and refresh the key's last send
+  (bypass, lamda.py:257-261);
+- any other alert sends iff no alert was sent for the key in the last
+  ALERT_INTERVAL (5 min), measured from the last send, not from a
+  window boundary (lamda.py:264-269); a suppressed alert leaves the
+  last send alone.
+
+The reference ships CONSECUTIVE_RECORDS_THRESHOLD = 1 (lamda.py:21),
+which makes its consecutive counter vestigial, so the throttle is
+purely time-based. Its 1-hour state purge (lamda.py:402-416) cannot
+change a send at threshold 1: a key idle for an hour is far past the
+5-minute interval either way.
 
 The clock is the *event* timestamp column, not wall clock, so tests and
 replays are deterministic (SURVEY §7.3 "throttle exactness").
 
-Two implementations:
+The greedy decision is sequential per key (each depends on every prior
+send), so no window function expresses it. ``_decide`` folds each
+key's sequence JVM-side with the ``aggregate`` higher-order function
+(no Python UDF). Two views share it:
 
-- ``throttle_alerts_stateful``: exact greedy semantics via
-  ``applyInPandasWithState`` on a streaming DataFrame. Shuffles by key
-  once; state is one (timestamp, int) pair per key — trivially sized
-  even with millions of keys.
-- ``throttle_batch_window``  : batch approximation — first alert per
-  (key, 5-min tumbling window) sends. Same guarantee ("≤1 send per key
-  per 5 min") but window-aligned instead of greedy; documented fallback
-  for batch backfills.
+- ``throttle_sends``: the send rows. The streaming loader carries state
+  across micro-batches by passing the alerts sink as ``sent_history``;
+  a key's carried state is its latest send time.
+- ``throttle_stateful_replay``: per-key counters, oracle-checked.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 ALERT_INTERVAL_SECONDS = 300.0  # lamda.py:20
-CONSECUTIVE_THRESHOLD = 1  # lamda.py:21
-STATE_TTL_SECONDS = 3600.0  # lamda.py:408
 
 THROTTLE_OUTPUT_SCHEMA = T.StructType(
     [
@@ -56,246 +49,132 @@ THROTTLE_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-THROTTLE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_sent_epoch", T.DoubleType()),
-        T.StructField("consecutive", T.IntegerType()),
-    ]
-)
 
-
-def _make_throttle_group(consecutive_threshold: int, event_time_ttl: bool):
-    def _throttle_group(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        loc_id, alert_type = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        last_sent, consecutive = (
-            state.get if state.exists else (None, 0)
-        )
-
-        rows: list[dict[str, Any]] = []
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        # event_id tie-break: same-timestamp alerts must throttle in a
-        # replay-stable order, not shuffle arrival order.
-        batch = batch.sort_values(["timestamp", "event_id"], kind="stable")
-        max_seen = None
-        for rec in batch.itertuples(index=False):
-            now = rec.timestamp.timestamp()
-            max_seen = now if max_seen is None else max(max_seen, now)
-            send = False
-            if rec.priority == "CRITICAL":
-                # bypass: sends + refreshes last_sent, but does NOT touch
-                # the consecutive counter (lamda.py:257-261).
-                send = True
-                last_sent = now
-            elif last_sent is not None and now - last_sent < ALERT_INTERVAL_SECONDS:
-                send = False  # suppressed; counter untouched (lamda.py:264-269)
-            else:
-                consecutive += 1
-                if consecutive >= consecutive_threshold:
-                    send = True
-                    last_sent = now
-                    consecutive = 0
-            if send:
-                rows.append(
-                    {
-                        "loc_id": loc_id,
-                        "alert_type": alert_type,
-                        "event_id": rec.event_id,
-                        "priority": rec.priority,
-                        "description": rec.description,
-                        "sent_timestamp": rec.timestamp,
-                    }
-                )
-
-        state.update((last_sent, consecutive))
-        # Deterministic TTL replacing the reference's probabilistic purge.
-        if event_time_ttl:
-            # Evict when the WATERMARK passes (last event seen + TTL):
-            # a pure function of event time, so a replay/backfill evicts
-            # at exactly the same point in the stream as the live run.
-            # The watermark guard covers pathological late batches whose
-            # horizon would otherwise not be in the future.
-            horizon_ms = int((max_seen + STATE_TTL_SECONDS) * 1000)
-            state.setTimeoutTimestamp(
-                max(horizon_ms, state.getCurrentWatermarkMs() + 1000)
-            )
-        else:
-            state.setTimeoutDuration(int(STATE_TTL_SECONDS * 1000))
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in THROTTLE_OUTPUT_SCHEMA.fields]
-            )
-
-    return _throttle_group
-
-
-def throttle_alerts_stateful(
-    exploded_alerts: DataFrame,
-    consecutive_threshold: int = CONSECUTIVE_THRESHOLD,
-    ttl_clock: str = "event",
-    watermark_delay: str = "10 minutes",
+def _decide(
+    exploded_alerts: DataFrame, sent_history: DataFrame | None
 ) -> DataFrame:
-    """Exact stateful throttle over a *streaming* exploded-alerts frame.
+    """One row per alert (loc_id, alert_type, ts, event_id, priority,
+    description) with its throttle decision, ``sent``.
 
-    Input contract: columns (event_id, loc_id, timestamp, alert_type,
-    priority, description) — ``operators.pipeline.exploded_alerts``.
-
-    State TTL: the throttle clock is the *event* timestamp, and with
-    the default ``ttl_clock="event"`` so is eviction — the state
-    timeout is an EventTimeTimeout at (last event seen + 1 h), pinned
-    to the watermark (``withWatermark`` is applied here, with
-    ``watermark_delay`` bounding how out-of-order alerts may arrive
-    before being dropped as late). Replays and backfills therefore
-    evict at exactly the same point in the stream as the live run
-    (proven by test: a key evicted mid-sequence re-arms its
-    consecutive counter identically on replay).
-
-    ``ttl_clock="processing"`` restores round-3 behavior — 1 h of
-    wall-clock idleness per key, the deterministic form of the
-    reference's probabilistic wall-clock purge (lamda.py:402-416).
-    A wall-compressed replay then evicts *later* relative to event
-    time than live (only ever retaining suppression state longer,
-    never dropping it early); use it only where no watermark can be
-    defined. Caveat (round-11 triage): with ProcessingTimeTimeout,
-    Spark keeps scheduling empty timeout-check micro-batches after the
-    source is exhausted, so an ``availableNow`` run with pending
-    wall-clock timeouts may not self-terminate until they fire — for
-    finite replays/backfills use the default event-time clock, or stop
-    the query explicitly once the sink converges.
+    ``sent_history`` rows (``THROTTLE_OUTPUT_SCHEMA``) enter the same
+    single ``groupBy`` under a ``carry`` flag: they are kept out of
+    ``seq`` and only seed the fold's last send with their max
+    ``sent_timestamp``. Partial aggregation then shuffles one history
+    row per key per partition, not the whole history.
     """
-    if ttl_clock == "event":
-        src = exploded_alerts.withWatermark("timestamp", watermark_delay)
-        timeout_conf = GroupStateTimeout.EventTimeTimeout
-    elif ttl_clock == "processing":
-        src = exploded_alerts
-        timeout_conf = GroupStateTimeout.ProcessingTimeTimeout
-    else:
-        raise ValueError(f"unknown ttl_clock: {ttl_clock!r}")
-    return src.groupBy("loc_id", "alert_type").applyInPandasWithState(
-        _make_throttle_group(consecutive_threshold, ttl_clock == "event"),
-        outputStructType=THROTTLE_OUTPUT_SCHEMA,
-        stateStructType=THROTTLE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
+    rows = exploded_alerts.select(
+        "loc_id",
+        "alert_type",
+        F.lit(False).alias("carry"),
+        F.col("timestamp").alias("ts"),
+        "event_id",
+        "priority",
+        "description",
+    )
+    if sent_history is not None:
+        rows = rows.unionByName(
+            sent_history.select(
+                "loc_id",
+                "alert_type",
+                F.lit(True).alias("carry"),
+                F.col("sent_timestamp").alias("ts"),
+                F.lit(None).cast("string").alias("event_id"),
+                F.lit(None).cast("string").alias("priority"),
+                F.lit(None).cast("string").alias("description"),
+            )
+        )
+    carry = F.col("carry")
+    seq = rows.groupBy("loc_id", "alert_type").agg(
+        F.array_sort(
+            F.collect_list(
+                F.when(~carry, F.struct("ts", "event_id", "priority", "description"))
+            )
+        ).alias("seq"),
+        F.max(F.when(carry, F.col("ts"))).alias("carried_last"),
+    )
+    # acc: (last send epoch-seconds | NULL, one flag byte per alert
+    # folded so far). Epoch math in DOUBLE on both engines (Spark
+    # CAST(ts AS DOUBLE) == DuckDB epoch(ts)), so the >= boundary
+    # resolves identically. The flags are a byte string, not an array
+    # of the sent alerts: aggregate() copies its accumulator at every
+    # step, deeply for an array. On local[4] an array of sends made the
+    # sf0.1 replay take 45 s; the flags take about 1 s.
+    flags = F.expr(
+        f"""
+        aggregate(
+          seq,
+          struct(CAST(carried_last AS DOUBLE) AS last, X'' AS flags),
+          (acc, e) -> CASE
+            WHEN e.priority = 'CRITICAL' OR acc.last IS NULL
+              OR CAST(e.ts AS DOUBLE) - acc.last >= {ALERT_INTERVAL_SECONDS!r}
+            THEN struct(
+              CAST(e.ts AS DOUBLE) AS last, concat(acc.flags, X'01') AS flags)
+            ELSE struct(acc.last AS last, concat(acc.flags, X'00') AS flags)
+          END
+        ).flags
+        """
+    )
+    # Two selects: the fold runs once per key, below the explode.
+    return (
+        seq.select("loc_id", "alert_type", "seq", flags.alias("flags"))
+        .select(
+            "loc_id", "alert_type", "flags", F.posexplode("seq").alias("pos", "a")
+        )
+        .select(
+            "loc_id",
+            "alert_type",
+            "a.*",
+            F.expr("substring(flags, pos + 1, 1) = X'01'").alias("sent"),
+        )
     )
 
 
-def throttle_stateful_replay(
-    exploded_alerts: DataFrame,
-    interval_seconds: float = ALERT_INTERVAL_SECONDS,
+def throttle_sends(
+    exploded_alerts: DataFrame, sent_history: DataFrame | None = None
 ) -> DataFrame:
-    """Batch REPLAY of the exact greedy stateful throttle (T2), per-key
-    counters out — the oracle-checkable twin of
-    ``throttle_alerts_stateful`` the same way the windowed-HLL batch
-    replay twins the streaming sketch.
+    """The alerts that clear the throttle, as ``THROTTLE_OUTPUT_SCHEMA``
+    rows.
 
-    Semantics replayed exactly (reference ``Lambda/lamda.py:246-283``
-    at its shipped CONSECUTIVE_RECORDS_THRESHOLD = 1, which makes the
-    consecutive counter vestigial): per (loc_id, alert_type) in
-    (timestamp, event_id) order, an alert SENDS iff it is CRITICAL
-    (bypass, refreshing last_sent) or no send happened in the last
-    ``interval_seconds``; otherwise it is SUPPRESSED. This greedy fold
-    is sequential per key — each decision depends on every prior send —
-    so no window function expresses it; instead each key's sequence is
-    folded JVM-side with the ``aggregate`` higher-order function (no
-    Python UDF, whole fold inside codegen).
+    Input contract: columns (event_id, loc_id, timestamp, alert_type,
+    priority, description) — ``operators.pipeline.exploded_alerts``.
+    ``sent_history`` holds earlier sends (``THROTTLE_OUTPUT_SCHEMA``,
+    e.g. the alerts sink): each key resumes from its latest one, so
+    chaining batch by batch sends what one fold over all of them would,
+    provided the batches arrive in event-time order.
+    """
+    return _decide(exploded_alerts, sent_history).filter("sent").select(
+        "loc_id",
+        "alert_type",
+        "event_id",
+        "priority",
+        "description",
+        F.col("ts").alias("sent_timestamp"),
+    )
 
-    Scale: state is one scalar accumulator per key, but ``collect_list``
-    materializes each key's replay sequence on one executor — bounded by
-    alerts-per-key *within the replay window*, the same bound the
-    streaming operator has per micro-batch. Replaying an unbounded
-    history would instead shard the fold by day and chain the carry-out
-    last_sent, exactly like the streaming op chains state across
-    batches; for the verification-replay use case (a backfill window)
-    the direct fold is the right shape.
+
+def throttle_stateful_replay(exploded_alerts: DataFrame) -> DataFrame:
+    """Batch replay of the throttle, per-key counters out — the
+    oracle-checkable view of the fold the streaming loader runs.
+
+    Scale: ``collect_list`` materializes each key's replay sequence on
+    one executor, bounded by alerts-per-key within the replay window.
+    An unbounded history would instead be replayed in time-ordered
+    slices through ``throttle_sends``, each slice's sends carried into
+    the next, as the loader does per micro-batch.
 
     Returns one row per key: n_sent, n_critical_sent, n_suppressed,
     last_sent_at.
     """
-    seq = exploded_alerts.groupBy("loc_id", "alert_type").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("timestamp").alias("ts"),
-                    F.col("event_id").alias("event_id"),
-                    F.col("priority").alias("priority"),
-                )
-            )
-        ).alias("seq")
-    )
-    # acc: (last send epoch-seconds | NULL, sent/critical/suppressed
-    # counters, last sent timestamp). Epoch math in DOUBLE on both
-    # engines (Spark CAST(ts AS DOUBLE) == DuckDB epoch(ts)), so the
-    # >= boundary resolves identically.
-    send_cond = (
-        "e.priority = 'CRITICAL' OR acc.last IS NULL "
-        f"OR CAST(e.ts AS DOUBLE) - acc.last >= {float(interval_seconds)!r}"
-    )
-    fold = F.expr(
-        f"""
-        aggregate(
-          seq,
-          struct(
-            CAST(NULL AS DOUBLE) AS last,
-            CAST(0 AS BIGINT) AS n_sent,
-            CAST(0 AS BIGINT) AS n_crit,
-            CAST(0 AS BIGINT) AS n_sup,
-            CAST(NULL AS TIMESTAMP) AS last_sent_at
-          ),
-          (acc, e) -> CASE WHEN {send_cond} THEN struct(
-              CAST(e.ts AS DOUBLE) AS last,
-              acc.n_sent + CAST(1 AS BIGINT) AS n_sent,
-              acc.n_crit + CAST(
-                CASE WHEN e.priority = 'CRITICAL' THEN 1 ELSE 0 END
-                AS BIGINT) AS n_crit,
-              acc.n_sup AS n_sup,
-              e.ts AS last_sent_at)
-            ELSE struct(
-              acc.last AS last,
-              acc.n_sent AS n_sent,
-              acc.n_crit AS n_crit,
-              acc.n_sup + CAST(1 AS BIGINT) AS n_sup,
-              acc.last_sent_at AS last_sent_at)
-          END
+    sent = F.col("sent")
+    return (
+        _decide(exploded_alerts, None)
+        .groupBy("loc_id", "alert_type")
+        .agg(
+            F.count_if(sent).alias("n_sent"),
+            F.count_if(sent & (F.col("priority") == "CRITICAL")).alias(
+                "n_critical_sent"
+            ),
+            F.count_if(~sent).alias("n_suppressed"),
+            F.max(F.when(sent, F.col("ts"))).alias("last_sent_at"),
         )
-        """
     )
-    return seq.withColumn("acc", fold).select(
-        "loc_id",
-        "alert_type",
-        F.col("acc.n_sent").alias("n_sent"),
-        F.col("acc.n_crit").alias("n_critical_sent"),
-        F.col("acc.n_sup").alias("n_suppressed"),
-        F.col("acc.last_sent_at").alias("last_sent_at"),
-    )
-
-
-def throttle_batch_window(exploded_alerts: DataFrame) -> DataFrame:
-    """Batch approximation: first alert per (key, 5-min tumbling window).
-
-    CRITICAL alerts bypass entirely. Equivalent rate guarantee to the
-    greedy throttle, aligned to window boundaries instead of the last
-    send time.
-    """
-    from pyspark.sql import Window
-
-    critical = exploded_alerts.filter(F.col("priority") == "CRITICAL")
-    rest = exploded_alerts.filter(F.col("priority") != "CRITICAL")
-    w = Window.partitionBy(
-        "loc_id", "alert_type", F.window("timestamp", "5 minutes")
-    ).orderBy("timestamp", "event_id")
-    first = (
-        rest.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    out_cols = ["loc_id", "alert_type", "event_id", "priority", "description",
-                F.col("timestamp").alias("sent_timestamp")]
-    return critical.select(*out_cols).unionByName(first.select(*out_cols))

@@ -1,5 +1,6 @@
-"""Streaming: stateful throttle (T2/T3), batch-window fallback, and the
-end-to-end micro-batch pipeline with all sinks (T1/T5, S5/S6/S7/S10)."""
+"""Streaming: the alert throttle (T2) alone and carried across
+micro-batches by the loader, and the end-to-end micro-batch pipeline
+with all sinks (T1/T5, S5/S6/S7/S10)."""
 
 from __future__ import annotations
 
@@ -36,56 +37,42 @@ ALERT_ROWS = [
 
 
 def test_throttle_batch_window(spark):
-    from iot_real_time_data_pipeline_spark.streaming import throttle_batch_window
+    """One batch through ``throttle_sends``: send rows in the alerts
+    sink's column order."""
+    from iot_real_time_data_pipeline_spark.streaming.throttle import (
+        THROTTLE_OUTPUT_SCHEMA,
+        throttle_sends,
+    )
 
-    df = spark.createDataFrame(ALERT_ROWS, ALERT_SCHEMA)
-    sent = {r.event_id for r in throttle_batch_window(df).collect()}
-    # window-aligned: e1 first in [06:00,06:05), e2 suppressed, e3 first
-    # in [06:05,06:10); criticals always pass; e6 own key.
+    out = throttle_sends(spark.createDataFrame(ALERT_ROWS, ALERT_SCHEMA))
+    assert out.columns == THROTTLE_OUTPUT_SCHEMA.fieldNames()
+    sent = {r.event_id for r in out.collect()}
+    # e1 sent (t0), e2 suppressed (60s < 5min), e3 sent (400s);
+    # criticals always pass; e6 own key.
     assert sent == {"e1", "e3", "e4", "e5", "e6"}
 
 
-def test_throttle_stateful_greedy(spark, tmp_path):
-    from iot_real_time_data_pipeline_spark.streaming import throttle_alerts_stateful
-
-    src = tmp_path / "alerts_src"
-    src.mkdir()
-    # one file per micro-batch, ordered -> exercises cross-batch state
-    batches = [ALERT_ROWS[:2], ALERT_ROWS[2:4], ALERT_ROWS[4:]]
-    for i, rows in enumerate(batches):
-        with open(src / f"b{i}.jsonl", "w") as fh:
-            for r in rows:
-                fh.write(json.dumps({
-                    "event_id": r[0], "loc_id": r[1],
-                    "timestamp": r[2].isoformat(),
-                    "alert_type": r[3], "priority": r[4], "description": r[5],
-                }) + "\n")
-
-    stream = (
-        spark.readStream.schema(ALERT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
+def test_throttle_stateful_greedy(spark):
+    """Batch by batch, each batch's history being the sends so far: the
+    same sends as one fold over all the rows."""
+    from iot_real_time_data_pipeline_spark.streaming.throttle import (
+        THROTTLE_OUTPUT_SCHEMA,
+        throttle_sends,
     )
-    q = (
-        throttle_alerts_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("throttled")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(240), "stream did not finish (host-load timeout, not a data bug)"
-    sent = {r.event_id for r in spark.sql("select * from throttled").collect()}
-    # exact greedy: e1 sent (t0), e2 suppressed (60s < 5min), e3 sent
-    # (400s), criticals e4/e5 always, e6 own key.
-    assert sent == {"e1", "e3", "e4", "e5", "e6"}
+
+    sent_rows: list = []
+    for rows in [ALERT_ROWS[:2], ALERT_ROWS[2:4], ALERT_ROWS[4:]]:
+        history = spark.createDataFrame(sent_rows, THROTTLE_OUTPUT_SCHEMA)
+        sent_rows += throttle_sends(
+            spark.createDataFrame(rows, ALERT_SCHEMA), history
+        ).collect()
+    # e3 (batch 2) is 400s past e1's send, carried in from batch 1.
+    assert {r.event_id for r in sent_rows} == {"e1", "e3", "e4", "e5", "e6"}
 
 
 def test_throttle_stateful_replay_matches_greedy(spark):
-    """The batch REPLAY (driver-visible twin of the stateful op) folds
-    each key with the exact greedy semantics: same sends as
-    test_throttle_stateful_greedy on the same rows, counters out."""
+    """The batch replay's counters: same sends as
+    test_throttle_stateful_greedy on the same rows."""
     from iot_real_time_data_pipeline_spark.streaming import (
         throttle_stateful_replay,
     )
@@ -138,193 +125,97 @@ def test_throttle_stateful_replay_boundary_and_critical_refresh(spark):
     }
 
 
-def test_throttle_stateful_consecutive_threshold_2(spark, tmp_path):
-    """The counter path the reference ships disabled (threshold=1,
-    lamda.py:21): at threshold 2 a first hit only arms the counter, the
-    second sends and resets it, suppression leaves it untouched."""
-    from iot_real_time_data_pipeline_spark.streaming import throttle_alerts_stateful
+def _payload_batch(spark, lines):
+    """Raw payload lines parsed as one loader micro-batch."""
+    from iot_real_time_data_pipeline_spark.sources.events import parse_raw_payloads
 
-    rows = [
-        ("e1", "loc_1", ts(0), "High Temperature", "HIGH", "d1"),   # arms (1)
-        ("e2", "loc_1", ts(1), "High Temperature", "HIGH", "d2"),   # 2 -> send, reset
-        ("e3", "loc_1", ts(2), "High Temperature", "HIGH", "d3"),   # suppressed (<5min)
-        ("e4", "loc_1", ts(7), "High Temperature", "HIGH", "d4"),   # arms (1)
-        ("e5", "loc_1", ts(13), "High Temperature", "HIGH", "d5"),  # 2 -> send
-    ]
-    src = tmp_path / "thr2_src"
-    src.mkdir()
-    batches = [rows[:2], rows[2:4], rows[4:]]  # cross-batch state
-    for i, batch in enumerate(batches):
-        with open(src / f"b{i}.jsonl", "w") as fh:
-            for r in batch:
-                fh.write(json.dumps({
-                    "event_id": r[0], "loc_id": r[1], "timestamp": r[2].isoformat(),
-                    "alert_type": r[3], "priority": r[4], "description": r[5],
-                }) + "\n")
-    stream = (
-        spark.readStream.schema(ALERT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
+    return parse_raw_payloads(
+        spark.createDataFrame([(p,) for p in lines], ["value"]), "value"
     )
-    q = (
-        throttle_alerts_stateful(stream, consecutive_threshold=2)
-        .writeStream.format("memory")
-        .queryName("throttled2")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+def _hot_event(event_id, minute, second=0):
+    """A VALID loc_1 event raising one HIGH "High Temperature" alert."""
+    return event_json(
+        event_id=event_id,
+        timestamp=f"2024-03-01T06:{minute:02d}:{second:02d}Z",
+        sensors={"temperature": 36.0},
+        weather={"temperature_2m": 35.0},
     )
-    assert q.awaitTermination(480), "stream did not finish (host-load timeout, not a data bug)"
-    sent = {r.event_id for r in spark.sql("select * from throttled2").collect()}
-    assert sent == {"e2", "e5"}
 
 
-def _write_batches(src, batches):
-    import os
-    import time
-
-    src.mkdir()
-    now = time.time()
-    for i, batch in enumerate(batches):
-        path = src / f"b{i}.jsonl"
-        with open(path, "w") as fh:
-            for r in batch:
-                fh.write(json.dumps({
-                    "event_id": r[0], "loc_id": r[1], "timestamp": r[2].isoformat(),
-                    "alert_type": r[3], "priority": r[4], "description": r[5],
-                }) + "\n")
-        # FileStreamSource orders files by modification time; files
-        # written in the same clock tick would batch in ARBITRARY order
-        # under maxFilesPerTrigger=1, so space the mtimes explicitly.
-        os.utime(path, (now + i * 10, now + i * 10))
-
-
-def _run_throttle(spark, src, ckpt, name, **kwargs):
-    from iot_real_time_data_pipeline_spark.streaming import throttle_alerts_stateful
-
-    stream = (
-        spark.readStream.schema(ALERT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
+def _sent_high_temperature(spark, wh):
+    return sorted(
+        r.event_id
+        for r in spark.read.parquet(f"{wh}/alerts")
+        .filter(F.col("alert_type") == "High Temperature")
+        .collect()
     )
-    q = (
-        throttle_alerts_stateful(stream, **kwargs)
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", str(ckpt))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+def test_loader_throttles_across_micro_batches(spark, tmp_path):
+    """Two HIGH alerts for one key, 1 minute apart inside one 5-minute
+    window, in consecutive micro-batches: the second batch resumes from
+    the first one's send in the alerts sink, so only the first sends."""
+    from iot_real_time_data_pipeline_spark.streaming import foreach_batch_loader
+
+    wh = str(tmp_path / "wh")
+    load = foreach_batch_loader(wh)
+    load(_payload_batch(spark, [_hot_event("evt_a1", 1)]), 0)
+    load(_payload_batch(spark, [_hot_event("evt_a2", 2)]), 1)
+    assert _sent_high_temperature(spark, wh) == ["evt_a1"]
+
+
+def test_loader_throttle_is_greedy_not_window_aligned(spark, tmp_path):
+    """06:04:59 and 06:05:01 fall in different 5-minute windows but are
+    2 s apart: only the first sends."""
+    from iot_real_time_data_pipeline_spark.streaming import foreach_batch_loader
+
+    wh = str(tmp_path / "wh")
+    batch = [_hot_event("evt_b1", 4, 59), _hot_event("evt_b2", 5, 1)]
+    foreach_batch_loader(wh)(_payload_batch(spark, batch), 0)
+    assert _sent_high_temperature(spark, wh) == ["evt_b1"]
+
+
+def test_loader_alerts_equal_replay_fold(spark, tmp_path):
+    """The alerts sink after four time-ordered micro-batches holds, per
+    key, the sends of one replay fold over the concatenated input's
+    lake rows: streaming changes no throttle decision."""
+    from iot_real_time_data_pipeline_spark.generator import generate_events
+    from iot_real_time_data_pipeline_spark.operators.pipeline import (
+        exploded_alerts,
+        process_events,
+        route,
     )
-    assert q.awaitTermination(480), "stream did not finish (host-load timeout, not a data bug)"
-    return {r.event_id for r in spark.sql(f"select * from {name}").collect()}
-
-
-def test_throttle_event_time_ttl_evicts_replay_stably(spark, tmp_path):
-    """T3 event-time TTL: eviction is a function of EVENT time, so a
-    replayed run evicts at the same stream position as the live run.
-
-    With consecutive_threshold=2 an armed-but-unsent counter makes
-    eviction observable: e1 arms (loc_1, High Temperature) and sets an
-    event-time timeout at t0+1h; two filler batches on another key push
-    the watermark past that horizon (watermark advances from the
-    previous batch's max event time), so loc_1's state is evicted in
-    batch b2 — and e2 at t0+92min then re-ARMS a fresh counter instead
-    of firing the old one. Wall-clock TTL could never evict here (the
-    whole test runs in seconds), which the processing-clock run proves.
-    """
-    base = ts(0)
-
-    def at(seconds):
-        return base + datetime.timedelta(seconds=seconds)
-
-    rows = [
-        ("e1", "loc_1", at(0), "High Temperature", "HIGH", "arm"),
-        ("f1", "loc_9", at(4500), "High Temperature", "HIGH", "filler-arms"),
-        ("f2", "loc_9", at(5000), "High Temperature", "HIGH", "filler-sends"),
-        ("e2", "loc_1", at(5520), "High Temperature", "HIGH", "post-evict"),
-    ]
-    batches = [rows[:1], rows[1:2], rows[2:3], rows[3:]]
-
-    # Live run: e1 arms; watermark after b1 = 4500-600 = 3900 > 3600 ->
-    # loc_1 evicted during b2 (no loc_1 data there); f2 sends (counter
-    # 2 on loc_9); e2 re-arms a fresh counter -> NOT sent.
-    src1 = tmp_path / "ttl_live"
-    _write_batches(src1, batches)
-    live = _run_throttle(
-        spark, src1, tmp_path / "ttl_ckpt1", "ttl_live",
-        consecutive_threshold=2,
-    )
-    assert live == {"f2"}
-
-    # Replay: identical batches, fresh checkpoint -> identical evictions
-    # and identical sends (event-time TTL has no wall-clock input).
-    src2 = tmp_path / "ttl_replay"
-    _write_batches(src2, batches)
-    replay = _run_throttle(
-        spark, src2, tmp_path / "ttl_ckpt2", "ttl_replay",
-        consecutive_threshold=2,
-    )
-    assert replay == live
-
-    # Contrast: wall-clock TTL cannot evict inside this compressed
-    # replay, so the stale armed counter survives and e2 fires it —
-    # the round-3 divergence this round fixed.
-    #
-    # ProcessingTimeTimeout + availableNow does NOT reliably self-
-    # terminate: with wall-clock timeouts registered (1 h out), Spark's
-    # shouldRunAnotherBatch keeps scheduling empty timeout-check
-    # micro-batches after the data is exhausted (observed: hundreds of
-    # empty batches, round-11 triage). So the contrast run polls the
-    # sink for the expected decisions and stops the query explicitly —
-    # the SEMANTICS (no eviction: e2 fires the stale armed counter) are
-    # what this block asserts, not self-termination, which is exactly
-    # why ttl_clock="event" is the shipped default for finite replays.
-    import time as _time
-
     from iot_real_time_data_pipeline_spark.streaming import (
-        throttle_alerts_stateful,
+        foreach_batch_loader,
+        throttle_stateful_replay,
     )
 
-    src3 = tmp_path / "ttl_proc"
-    _write_batches(src3, batches)
-    stream3 = (
-        spark.readStream.schema(ALERT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src3))
-    )
-    q3 = (
-        throttle_alerts_stateful(
-            stream3, consecutive_threshold=2, ttl_clock="processing"
+    payloads = [e["raw"] or "not-json" for e in generate_events(n=240, seed=5)]
+    wh = str(tmp_path / "wh")
+    load = foreach_batch_loader(wh)
+    for i in range(4):
+        load(_payload_batch(spark, payloads[i * 60 : (i + 1) * 60]), i)
+
+    streamed = {
+        (r.loc_id, r.alert_type): (r.n_sent, r.last_sent_at)
+        for r in spark.read.parquet(f"{wh}/alerts")
+        .groupBy("loc_id", "alert_type")
+        .agg(
+            F.count("*").alias("n_sent"),
+            F.max("sent_timestamp").alias("last_sent_at"),
         )
-        .writeStream.format("memory")
-        .queryName("ttl_proc")
-        .option("checkpointLocation", str(tmp_path / "ttl_ckpt3"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    deadline = _time.time() + 480
-    proc: set[str] = set()
-    while _time.time() < deadline:
-        proc = {
-            r.event_id
-            for r in spark.sql("select * from ttl_proc").collect()
-        }
-        if proc == {"f2", "e2"} or not q3.isActive:
-            break
-        _time.sleep(2)
-    if q3.isActive:
-        q3.stop()
-    # Re-collect AFTER the query is fully stopped (ADVICE r11): the poll
-    # loop can break on `not q3.isActive` holding a snapshot taken just
-    # before the final micro-batch committed, which would flake the
-    # assert even though the sink ends up correct.
-    proc = {
-        r.event_id for r in spark.sql("select * from ttl_proc").collect()
+        .collect()
     }
-    assert proc == {"f2", "e2"}
+    lake = route(process_events(_payload_batch(spark, payloads)))["lake"]
+    replay = {
+        (r.loc_id, r.alert_type): (r.n_sent, r.last_sent_at)
+        for r in throttle_stateful_replay(
+            exploded_alerts(lake.dropDuplicates(["event_id"]))
+        ).collect()
+    }
+    assert streamed and streamed == replay
 
 
 def test_jsonl_mirror_holds_flat_lake_rows(spark, tmp_path):

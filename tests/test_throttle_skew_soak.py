@@ -1,38 +1,30 @@
-"""Throttle-under-skew streaming soak (VERDICT r10 item 7): the
-SKEW_AB_r10 state probe ran the 90 %-hot-key alert mix through ONE
-availableNow pass; this drives the same skew through MANY micro-batches
-(maxFilesPerTrigger=1) so cross-batch state chaining is exercised under
-the hot key, then asserts the two properties that make the stateful
-throttle scale-safe:
+"""Throttle-under-skew soak (VERDICT r10 item 7): a 90 %-hot-key alert
+mix chained through ``throttle_sends`` over MANY batches, each batch's
+history being the sends so far (read back from a parquet sink, as the
+streaming loader reads its alerts sink), so cross-batch carry is
+exercised under the hot key.
 
-1. **State is keyed, not volume-keyed**: the state store's
-   ``numRowsTotal`` stays <= distinct (loc_id, alert_type) keys no
-   matter how many alerts the hot key absorbs (reference semantics,
-   ``Lambda/lamda.py:246-283`` — one (last_sent, counter) pair per key).
-2. **Replay parity under skew**: per-key (n_sent, n_suppressed,
-   last_sent_at) from the streamed run equals the batch
-   ``throttle_stateful_replay`` fold over the same alerts — the greedy
-   decisions are identical whether the key's sequence arrives in 30
-   micro-batches or one.
+**Replay parity under skew**: per-key (n_sent, n_suppressed,
+last_sent_at) from the chained run equals one
+``throttle_stateful_replay`` fold over the same alerts — the greedy
+decisions are identical whether the key's sequence arrives in 30
+batches or one (reference semantics, ``Lambda/lamda.py:246-283``).
 
-Timestamps increase globally across batch files, so per-batch arrival
-order equals global (timestamp, event_id) order (the replay's fold
-order) and nothing is watermark-late. TTL eviction cannot diverge the
-two paths at the shipped CONSECUTIVE_THRESHOLD=1: the suppression
-window (300 s) is far inside the TTL (3600 s), so any post-eviction
-alert would have been past the suppression window anyway.
+Timestamps increase globally across batches, so per-batch arrival order
+equals global (timestamp, event_id) order, the replay's fold order.
 """
 
 from __future__ import annotations
 
-import json
+import os
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from iot_real_time_data_pipeline_spark.streaming import (
-    throttle_alerts_stateful,
+from iot_real_time_data_pipeline_spark.streaming.throttle import (
+    THROTTLE_OUTPUT_SCHEMA,
+    throttle_sends,
     throttle_stateful_replay,
 )
 
@@ -79,84 +71,8 @@ def _iso(epoch: float) -> str:
     ).strftime("%Y-%m-%dT%H:%M:%S.%f")
 
 
-@pytest.mark.slow
-@pytest.mark.soak
-def test_throttle_skew_soak_state_bounded_and_replay_parity(spark, tmp_path):
-    import time
-
-    rows = _skewed_alerts()
-    src = tmp_path / "src"
-    src.mkdir()
-    for b in range(N_BATCHES):
-        with open(src / f"b{b:03d}.jsonl", "w") as fh:
-            for r in rows[b * EVENTS_PER_BATCH : (b + 1) * EVENTS_PER_BATCH]:
-                fh.write(
-                    json.dumps({**r, "timestamp": _iso(r["timestamp"])}) + "\n"
-                )
-
-    stream = (
-        spark.readStream.schema(ALERT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    # recentProgress retains only the last numRecentProgressUpdates
-    # entries (default 100) — fine at N_BATCHES=30, but raise it so a
-    # future scale-up of the soak can't silently undercount batches and
-    # fail the >= N_BATCHES assert below (ADVICE r11).
-    spark.conf.set(
-        "spark.sql.streaming.numRecentProgressUpdates", str(4 * N_BATCHES)
-    )
-    t0 = time.perf_counter()
-    q = (
-        throttle_alerts_stateful(stream)
-        .writeStream.format("memory")
-        .queryName("throttled_skew")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(900)
-    wall = time.perf_counter() - t0
-    if q.isActive:
-        # Timeout: stop the query BEFORE asserting so a failure doesn't
-        # leak an active stateful stream + memory sink into the shared
-        # spark fixture for subsequent tests (ADVICE r11).
-        q.stop()
-    assert finished, f"skew soak did not drain within 900s (wall {wall:.0f}s)"
-
-    # --- 1. state bounded by keys, not volume -------------------------
-    distinct_keys = len({(r["loc_id"], r["alert_type"]) for r in rows})
-    state_rows = None
-    n_batches_seen = 0
-    for p in q.recentProgress:
-        d = p if isinstance(p, dict) else json.loads(p.json)
-        if d.get("numInputRows", 0):
-            n_batches_seen += 1
-        for so in d.get("stateOperators", []):
-            state_rows = so.get("numRowsTotal", state_rows)
-    assert n_batches_seen >= N_BATCHES  # one file per trigger
-    assert state_rows is not None and 0 < state_rows <= distinct_keys, (
-        state_rows,
-        distinct_keys,
-    )
-
-    # --- 2. replay parity: per-key counters + last send ----------------
-    sent = spark.sql(
-        "select loc_id, alert_type, event_id, sent_timestamp "
-        "from throttled_skew"
-    ).collect()
-    # exactly-once per alert even across 30 stateful batches
-    assert len({r.event_id for r in sent}) == len(sent)
-    streamed: dict[tuple, list] = {}
-    for r in sent:
-        streamed.setdefault((r.loc_id, r.alert_type), []).append(r)
-    n_alerts_per_key: dict[tuple, int] = {}
-    for r in rows:
-        k = (r["loc_id"], r["alert_type"])
-        n_alerts_per_key[k] = n_alerts_per_key.get(k, 0) + 1
-
-    batch_df = spark.createDataFrame(
+def _alerts_df(spark, rows):
+    return spark.createDataFrame(
         [
             (
                 r["event_id"],
@@ -170,9 +86,42 @@ def test_throttle_skew_soak_state_bounded_and_replay_parity(spark, tmp_path):
         ],
         ALERT_SCHEMA.replace("timestamp timestamp", "timestamp string"),
     ).withColumn("timestamp", F.to_timestamp("timestamp"))
+
+
+@pytest.mark.slow
+@pytest.mark.soak
+def test_throttle_skew_soak_chained_batches_match_replay(spark, tmp_path):
+    import time
+
+    rows = _skewed_alerts()
+    sink = str(tmp_path / "alerts")
+    t0 = time.perf_counter()
+    for b in range(N_BATCHES):
+        history = (
+            spark.read.schema(THROTTLE_OUTPUT_SCHEMA).parquet(sink)
+            if os.path.exists(sink)
+            else None
+        )
+        batch = rows[b * EVENTS_PER_BATCH : (b + 1) * EVENTS_PER_BATCH]
+        throttle_sends(_alerts_df(spark, batch), history).write.mode(
+            "append"
+        ).parquet(sink)
+    wall = time.perf_counter() - t0
+
+    sent = spark.read.parquet(sink).collect()
+    # exactly-once per alert even across 30 chained batches
+    assert len({r.event_id for r in sent}) == len(sent)
+    streamed: dict[tuple, list] = {}
+    for r in sent:
+        streamed.setdefault((r.loc_id, r.alert_type), []).append(r)
+    n_alerts_per_key: dict[tuple, int] = {}
+    for r in rows:
+        k = (r["loc_id"], r["alert_type"])
+        n_alerts_per_key[k] = n_alerts_per_key.get(k, 0) + 1
+
     replay = {
         (r.loc_id, r.alert_type): r
-        for r in throttle_stateful_replay(batch_df).collect()
+        for r in throttle_stateful_replay(_alerts_df(spark, rows)).collect()
     }
     assert set(replay) == set(n_alerts_per_key)
     for key, rr in replay.items():
@@ -190,9 +139,7 @@ def test_throttle_skew_soak_state_bounded_and_replay_parity(spark, tmp_path):
         n_alerts_per_key[("loc_hot", "High Temperature")] - hot.n_critical_sent
     )
 
-    # PERF.md evidence line (state rows, wall) — printed for the record
     print(
         f"\nTHROTTLE_SKEW_SOAK n_alerts={len(rows)} batches={N_BATCHES} "
-        f"distinct_keys={distinct_keys} state_rows={state_rows} "
-        f"wall={wall:.1f}s sent={len(sent)}"
+        f"keys={len(n_alerts_per_key)} wall={wall:.1f}s sent={len(sent)}"
     )
