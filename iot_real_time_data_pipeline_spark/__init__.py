@@ -11,7 +11,8 @@ row-wise Python UDFs on the hot path).
 Layout
 ------
 - ``schemas``       : StructTypes + the per-location sensor-range contract
-- ``session``       : tuned SparkSession builders (AQE, Arrow, shuffle sizing)
+- ``session``       : the one session builder and its conf table
+                      (``ENGINE_CONF``: AQE, broadcast, plan-rule choices)
 - ``generator``     : seeded IoT fixture generator (mirrors the producer's
                       fault taxonomy so expected labels are assertable)
 - ``functions/``    : validation, alert, flatten, texthash expression builders

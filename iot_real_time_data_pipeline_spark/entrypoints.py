@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 # pyspark.errors.utils._enable_debugging_cache, so a driver-owned plain
 # session cannot turn it off after the fact — pre-seed the cache at
 # engine import. Purely diagnostic (error call-site decoration only);
-# sessions built by session.py/bench.py also set the conf properly.
+# sessions built by session.build_session also set the conf properly.
 # Guards (ADVICE r12): only poke when the attribute exists AND is still
 # unresolved (None) — a PySpark that renamed or already resolved it is
 # left alone — and honor an env escape hatch so call-site debugging can
@@ -62,6 +62,7 @@ from .functions.validation import attach_validation_arrays
 from .operators.pipeline import process_events, to_staging
 from .operators.star_schema import incremental_load
 from .schemas import SENSOR_NAMES, WEATHER_FIELDS
+from .session import apply_read_confs
 
 # (sensor -> (scale, offset, span)): val = offset + (value * scale) % span
 SENSOR_DERIVATION = {
@@ -122,46 +123,20 @@ def _sweep_dead_sessions() -> None:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan with the nanos-timestamp compatibility knob.
+    """Parquet scan of one driver table, memoized per session.
 
-    The driver's ``events.parquet`` stores ``ts`` as parquet
-    TIMESTAMP(NANOS), which Spark 4 rejects by default
-    (``PARQUET_TYPE_ILLEGAL``). ``nanosAsLong`` is a runtime SQL conf, so
-    set it here — the driver owns the SparkSession and ``session.py``
-    confs may not be present. Columns read as long-nanos are converted
-    back by the caller (see ``iot_raw_events``).
+    The driver owns the SparkSession, so ``session.build_session`` confs
+    may not be present: ``apply_read_confs`` sets the runtime confs the
+    scan and the plans over it need (nanos timestamps read as long,
+    UTC, no constraint propagation, no InferFiltersFromGenerate) and
+    no other. Columns read as long-nanos are converted back by the
+    caller (see ``iot_raw_events``).
     """
     memo = _READ_TABLE_MEMO.get((sf_dir, name))
     if memo is not None and memo[0] is spark:
         return memo[1]
     _sweep_dead_sessions()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Datetime-part extraction (dim_time) must agree with the DuckDB
-    # oracle, which sees naive (UTC-equivalent) timestamps — pin the
-    # session zone rather than trusting the driver's default.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # The layered validation plan (~100 aliased boolean columns across
-    # stacked projections) makes InferFiltersFromConstraints explode
-    # combinatorially when a Filter sits above it — minutes of driver
-    # CPU at plan time. Constraint propagation buys nothing for this
-    # query surface (no inferred-IsNotNull join pruning opportunities),
-    # so turn it off for the session.
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    # InferFiltersFromGenerate turns every explode(f(x)) into a
-    # size(f(x)) > 0 pre-filter; filter pushdown then re-INLINES the
-    # full generator expression below the repartition — for the k-gram
-    # pipelines that means the whole token-hash transform re-evaluated
-    # once per chained element_at (8x for 8-grams) on the unsplit scan
-    # task. Measured on docs_repeated_spans at sf0.1: 93 s with the
-    # rule, 1.3-2.6 s without (and the same ratio would hold per-byte
-    # on a cluster — the recomputation is in the row path, not a local
-    # artifact). The inferred filter only skips empty arrays, which a
-    # non-outer Generate drops anyway; excluding the rule is
-    # semantics-free. Pinned by test_generate_infers_no_expensive_scan_filter.
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
+    apply_read_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     # Parquet splits at row-group granularity; the driver's test files
     # are single-row-group, so without this the scan yields ONE

@@ -753,7 +753,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = BPE_TRAIN_MERGES,
     text_col: str = "text",
-    batch_k: int = 1,
 ) -> DataFrame:
     """Distributed BPE tokenizer TRAINING: the iterative greedy-merge
     loop itself (not just the first-round candidate counts of
@@ -772,16 +771,12 @@ def bpe_train(
     sequence is deterministic — which makes the whole LOOP
     oracle-checkable: the DuckDB twin unrolls every round.
 
-    ``batch_k > 1`` opts into the standard trainer optimization: per
-    round, the top-k NON-OVERLAPPING pairs (no shared symbols — so each
-    selected pair's count provably equals what the sequential trainer
-    would have seen) merge together, cutting driver round-trips and
-    lineage checkpoints ~k×. ``batch_k=1`` is the oracle-mirror exact
-    path (DuckDB unrolls that sequence).
-
     Returns ``(merge_rank, a, b, freq)`` — one row per learned merge.
+    The merge table is JVM literals, so the trainer's last cached frame
+    is released before returning.
     """
-    merges, _ = _bpe_train_state(docs, n_merges, text_col, batch_k=batch_k)
+    merges, _, cached = _bpe_train_state(docs, n_merges, text_col)
+    cached.unpersist()
     return _merge_table(docs.sparkSession, merges)
 
 
@@ -809,22 +804,13 @@ def _merge_table(spark, merges: list[tuple[int, str, str, int]]) -> DataFrame:
 
 
 def _bpe_train_state(
-    docs: DataFrame, n_merges: int, text_col: str, batch_k: int = 1
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """The shared trainer loop: returns the learned merge list AND the
+    docs: DataFrame, n_merges: int, text_col: str
+) -> tuple[list[tuple[int, str, str, int]], DataFrame, DataFrame]:
+    """The shared trainer loop: returns the learned merge list, the
     final distinct-word symbol table ``(w, cnt, syms)`` — the trained
     tokenizer's full state, which :func:`bpe_encode` applies to the
-    corpus without re-deriving anything.
-
-    ``batch_k``: merges applied per round. Selection is greedy by
-    (freq DESC, a, b); a candidate joins the round's batch only if its
-    symbols are DISJOINT from every already-selected pair's symbols —
-    merging (a1,b1) only creates/destroys pairs touching a1/b1/merged1,
-    so a disjoint (a2,b2)'s occurrence count is invariant under it and
-    the recorded freq equals the sequential trainer's. (A brand-new
-    pair involving a merged symbol could in principle overtake a
-    selected one mid-round — the standard, accepted approximation; the
-    ``batch_k=1`` default has no approximation and mirrors the oracle.)
+    corpus without re-deriving anything — and the one cached frame the
+    final table still reads, which the caller unpersists when done.
     """
     words = (
         docs.select(F.explode(TH.tokens(F.col(text_col))).alias("w"))
@@ -850,9 +836,11 @@ def _bpe_train_state(
     # baked-RDD variant ran 32-task rounds where AQE runs 1-2 tasks).
     # Plan growth stays LINEAR (not labelprop's 2^rounds): each round
     # references the previous frame exactly once, so the r12 nested-
-    # plan pathology cannot arise here, and the CacheManager dedupes
-    # the identical plans across in-session repeats.
-    cur = vocab.persist()
+    # plan pathology cannot arise here. One frame stays cached at a
+    # time: a round's collect loads ``cur``, after which the frame it
+    # was built from is unpersisted (its cache is no longer read). The
+    # final fold is left unpersisted — the caller reads it at most once.
+    cur = cached = vocab.persist()
     merges: list[tuple[int, str, str, int]] = []
     init = F.expr("cast(array() as array<string>)")
 
@@ -874,7 +862,6 @@ def _bpe_train_state(
         return step
 
     while len(merges) < n_merges:
-        k = min(batch_k, n_merges - len(merges))
         pairs = (
             cur.filter(F.size("syms") >= 2)
             .select(
@@ -889,31 +876,19 @@ def _bpe_train_state(
             .groupBy("p.a", "p.b")
             .agg(F.sum("cnt").alias("freq"))
         )
-        # One driver read per ROUND: enough candidates that the
-        # disjointness filter can still fill the batch (4× slack).
-        top = (
-            pairs.orderBy(F.col("freq").desc(), "a", "b")
-            .limit(max(k * 4, k))
-            .collect()
-        )
+        # One driver read per round; it also loads ``cur``'s cache.
+        top = pairs.orderBy(F.col("freq").desc(), "a", "b").limit(1).collect()
+        if cached is not cur:
+            cached.unpersist()
+            cached = cur
         if not top:
             break
-        batch: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        for row in top:
-            a, b = row["a"], row["b"]
-            if a in used or b in used:
-                continue
-            batch.append((a, b, int(row["freq"])))
-            used.update((a, b, a + b))
-            if len(batch) >= k:
-                break
-        col = F.col("syms")
-        for a, b, freq in batch:
-            col = F.aggregate(col, init, make_step(a, b, a + b))
-            merges.append((len(merges), a, b, freq))
-        cur = cur.withColumn("syms", col).persist()
-    return merges, cur
+        a, b = top[0]["a"], top[0]["b"]
+        merges.append((len(merges), a, b, int(top[0]["freq"])))
+        cur = cur.withColumn("syms", F.aggregate("syms", init, make_step(a, b, a + b)))
+        if len(merges) < n_merges:
+            cur = cur.persist()
+    return merges, cur, cached
 
 
 def bpe_encode(
@@ -942,7 +917,7 @@ def bpe_encode(
     Returns ``(doc_id, n_words, n_chars, n_bpe_tokens,
     compression_ppm)``.
     """
-    _, final_vocab = _bpe_train_state(docs, n_merges, text_col)
+    _, final_vocab, _ = _bpe_train_state(docs, n_merges, text_col)
     enc = final_vocab.select("w", F.size("syms").alias("n_sym"))
     tok = docs.select(
         F.col(id_col).alias("doc_id"),

@@ -3,25 +3,21 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import SparkSession
+
+from iot_real_time_data_pipeline_spark.session import build_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("engine-tests")
+    spark = build_session(
+        "engine-tests",
+        master="local[4]",
+        shuffle_partitions=4,
         # The suite shares ONE JVM across ~390 tests; at the 1g default
         # the round-10 volume tests (100K-event fuzz, 100-batch soak)
         # OOM'd the heap mid-suite and cascaded ConnectionRefused into
         # every later test. 4g is still a fraction of the host.
-        .config("spark.driver.memory", "4g")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+        extra_conf={"spark.driver.memory": "4g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
@@ -89,7 +85,3 @@ def event_json(
         rec.pop(k, None)
     return json.dumps(rec)
 
-
-# Keep test sessions aligned with production session tuning (see
-# session.py): constraint propagation off — Filters over the layered
-# validation projections otherwise cost exponential plan time.

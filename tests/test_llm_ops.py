@@ -2254,43 +2254,20 @@ def test_bpe_train_matches_python_reference_trainer(spark):
     assert any("es" in m or "est" in m or "lo" in m for m in learned)
 
 
-def test_bpe_train_batched_parity_with_sequential(spark):
-    """batch_k>1 applies top-k DISJOINT merges per round; on a corpus
-    whose top pairs share no symbols the batched trainer must equal the
-    sequential one merge-for-merge (ranks, pairs, freqs) — while paying
-    one driver round-trip instead of k."""
-    # four 2-symbol words with strictly-tiered frequencies and disjoint
-    # alphabets: merging any one cannot touch another's count, and the
-    # collapsed single-symbol words contribute no new pairs.
-    text = " ".join(["ab"] * 10 + ["cd"] * 9 + ["ef"] * 8 + ["gh"] * 7)
+def test_bpe_train_leaves_no_cached_plan(spark):
+    """The trainer persists one frame per round and releases each once
+    the next is loaded; the merge table is JVM literals, so bpe_train
+    leaves the session's cache as it found it."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # A corpus no other test trains on: an identical plan cached by
+    # another test would be shared, and released, here.
+    text = " ".join(["qzv"] * 7 + ["qzk"] * 5 + ["vkq"] * 3)
     docs = spark.createDataFrame([(1, text, "en")],
                                  "doc_id long, text string, lang string")
-    seq = [(r.merge_rank, r.a, r.b, r.freq)
-           for r in sorted(TA.bpe_train(docs, n_merges=4).collect(),
-                           key=lambda r: r.merge_rank)]
-    bat = [(r.merge_rank, r.a, r.b, r.freq)
-           for r in sorted(TA.bpe_train(docs, n_merges=4, batch_k=4).collect(),
-                           key=lambda r: r.merge_rank)]
-    assert seq == bat == [
-        (0, "a", "b", 10), (1, "c", "d", 9), (2, "e", "f", 8), (3, "g", "h", 7)
-    ]
-
-
-def test_bpe_train_batched_skips_overlapping_pairs_in_round(spark):
-    """Within one round, a candidate sharing a symbol with an already-
-    selected pair is deferred — 'ab' then 'bc' cannot co-merge (both
-    need 'b'); the batched trainer must pick 'bc' in a LATER round with
-    its then-correct count, exactly like the sequential path."""
-    text = " ".join(["abx"] * 10 + ["zbc"] * 9)
-    docs = spark.createDataFrame([(1, text, "en")],
-                                 "doc_id long, text string, lang string")
-    seq = [(r.a, r.b, r.freq)
-           for r in sorted(TA.bpe_train(docs, n_merges=3).collect(),
-                           key=lambda r: r.merge_rank)]
-    bat = [(r.a, r.b, r.freq)
-           for r in sorted(TA.bpe_train(docs, n_merges=3, batch_k=3).collect(),
-                           key=lambda r: r.merge_rank)]
-    assert seq == bat
+    before = cache.numCachedEntries()
+    merges = TA.bpe_train(docs, n_merges=4).collect()
+    assert len(merges) == 4
+    assert cache.numCachedEntries() == before
 
 
 def test_profile_table_counts_nulls_and_distincts(spark):

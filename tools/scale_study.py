@@ -79,27 +79,20 @@ def main() -> int:
     only = os.environ.get("SPARK_GRAFT_SCALE_QUERIES")
     names = only.split(",") if only else HEADLINE
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as E
     from iot_real_time_data_pipeline_spark.operators.dedup import (
         release_session_caches,
     )
+    from iot_real_time_data_pipeline_spark.session import build_session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-study")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = build_session(
+        "scale-study",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g")
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
