@@ -10,6 +10,9 @@ below is made for the 1000-executor / 100 TB target:
   ``entrypoints.read_table`` calls.
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic broadcast conversion replace hand-tuned shuffle counts.
+  Cached (persisted) frames are coalesced too, so the streaming
+  loader's lake, alerts and star sinks write one file per directory
+  per small micro-batch.
 - ``spark.sql.shuffle.partitions`` defaults to a small value locally but
   AQE coalescing makes the initial number mostly irrelevant; at cluster
   scale you'd set it ~2-3x total cores and let AQE coalesce down.
@@ -61,6 +64,14 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # A cached frame gets the same AQE coalescing as an uncached one, so
+    # a sink's file count no longer depends on whether its frame was
+    # persisted: the streaming loader's persisted frames otherwise keep
+    # every shuffle partition, and each task writes its own file into
+    # every lake directory it touches. This is an internal Spark conf;
+    # Spark warns that "queries may need an extra shuffle to read the
+    # cached data". PLAN_AUDIT.md shows no registered query gains one.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 # What a scan of the driver's tables and the plans over it need, on any

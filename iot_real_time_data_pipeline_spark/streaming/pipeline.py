@@ -29,9 +29,13 @@ History is read once per batch, each star table with its declared
 schema, so the reads launch no footer-inference job.
 
 Scale notes: every per-batch step is a narrow map or a key-bounded
-join; the lake write shuffles only to coalesce output files. The
-throttle's carried state is one timestamp per (loc_id, alert_type),
-reduced map-side from the alerts sink before its shuffle.
+join. AQE coalesces the loader's cached frames like any other plan
+(``session.ENGINE_CONF``), so while a micro-batch fits one coalesced
+partition each lake, alerts and star directory gets one file per
+batch; dead letters, a narrow map of the input, keep its
+partitioning. The throttle's carried state is one timestamp per
+(loc_id, alert_type), reduced map-side from the alerts sink before its
+shuffle.
 """
 
 from __future__ import annotations
@@ -43,7 +47,14 @@ from pyspark.sql import functions as F
 
 from ..functions.alerts import with_alerts
 from ..functions.validation import attach_validation_arrays
-from ..operators.pipeline import exploded_alerts, flat_lake_row, process_events, route
+from ..operators.pipeline import (
+    event_time,
+    exploded_alerts,
+    flat_lake_row,
+    process_events,
+    route,
+    to_staging,
+)
 from ..operators.star_schema import STAR_SCHEMAS, append_star, read_star_table
 from ..sources.events import read_raw_events_stream
 from .throttle import THROTTLE_OUTPUT_SCHEMA, throttle_sends
@@ -151,8 +162,6 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             # SURVEY §4's fix for the reference's unprunable S3 layout
             # (lamda.py:365-367 comments the date path out) — at scale
             # every time-bounded read prunes statically.
-            from ..operators.pipeline import event_time
-
             flat = (
                 flat_lake_row(lake.join(sent, "event_id", "left"))
                 .withColumn("loc_id_part", F.coalesce("loc_id", F.lit("unknown")))
@@ -177,8 +186,6 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
 
             # S10 — star-schema append: dims, then the fact against
             # the dims as written.
-            from ..operators.pipeline import to_staging
-
             append_star(to_staging(lake), star_dir, existing)
             lake.unpersist()
         finally:

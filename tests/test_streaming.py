@@ -353,7 +353,9 @@ def test_loader_job_budget_and_fact_keys_on_disk(spark, tmp_path):
     40 Spark jobs: history is read with declared schemas and the fact is
     built from the dims as written, not from an in-plan union that
     re-runs every new-dim plan. Every fact row the batch appends joins
-    all four stored dims on its surrogate keys."""
+    all four stored dims on its surrogate keys. AQE coalesces the
+    loader's cached frames, so the batch adds at most one parquet file
+    to each leaf directory of the lake, alerts and star sinks."""
     from iot_real_time_data_pipeline_spark.generator import generate_events
     from iot_real_time_data_pipeline_spark.sources.events import parse_raw_payloads
     from iot_real_time_data_pipeline_spark.streaming.pipeline import (
@@ -374,6 +376,17 @@ def test_loader_job_budget_and_fact_keys_on_disk(spark, tmp_path):
     before = [r.evt_id for r in spark.read.parquet(fact_path).select("evt_id").collect()]
     second = batch(payloads[40:])
 
+    # dead_letter/ is left out: dead letters are a narrow map of the
+    # input, so they keep the input's partitioning.
+    def parquet_files_per_dir():
+        counts = {}
+        for sink in ("lake", "alerts", "star"):
+            for d, _, files in os.walk(f"{wh}/{sink}"):
+                counts[d] = sum(f.endswith(".parquet") for f in files)
+        return counts
+
+    files_before = parquet_files_per_dir()
+
     sc = spark.sparkContext
     sc.setJobGroup("loader-budget", "second micro-batch")
     try:
@@ -383,6 +396,12 @@ def test_loader_job_budget_and_fact_keys_on_disk(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup("loader-budget")
     assert 0 < len(jobs) <= 40, f"{len(jobs)} jobs in one micro-batch"
+    added_files = {
+        os.path.relpath(d, wh): n - files_before.get(d, 0)
+        for d, n in parquet_files_per_dir().items()
+    }
+    assert any(added_files.values())
+    assert max(added_files.values()) <= 1, {d: n for d, n in added_files.items() if n > 1}
 
     added = spark.read.parquet(fact_path).filter(~F.col("evt_id").isin(before))
     n_added = added.count()
