@@ -108,7 +108,7 @@ def main() -> None:
     from iot_real_time_data_pipeline_spark import llm_queries as LQ
     from iot_real_time_data_pipeline_spark.entrypoints import iot_staging
     from iot_real_time_data_pipeline_spark.operators import dashboard as D
-    from iot_real_time_data_pipeline_spark.operators.star_schema import incremental_load
+    from iot_real_time_data_pipeline_spark.operators.star_schema import build_star
 
     times: dict[str, float] = {}
     repeats: dict[str, dict[str, float]] = {}
@@ -283,7 +283,7 @@ def main() -> None:
 
     # --- star build (once, cached) ----------------------------------------
     def _star():
-        star = incremental_load(staging, existing=None, dense_keys=False)
+        star = build_star(staging)
         out = {name: df.persist() for name, df in star.items()}
         # One action materializes all five caches: the fact plan reads
         # through the dims' persist markers, so their InMemoryRelations

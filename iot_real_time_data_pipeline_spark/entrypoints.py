@@ -60,7 +60,7 @@ except Exception:  # pragma: no cover
 from .functions.alerts import with_alerts
 from .functions.validation import attach_validation_arrays
 from .operators.pipeline import process_events, to_staging
-from .operators.star_schema import incremental_load
+from .operators.star_schema import build_star
 from .schemas import SENSOR_NAMES, WEATHER_FIELDS
 from .session import apply_read_confs
 
@@ -261,4 +261,4 @@ def iot_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def iot_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return incremental_load(iot_staging(spark, sf_dir), existing=None, dense_keys=True)
+    return build_star(iot_staging(spark, sf_dir), dense_keys=True)

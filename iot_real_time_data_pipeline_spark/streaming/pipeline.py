@@ -55,7 +55,7 @@ from ..operators.pipeline import (
     route,
     to_staging,
 )
-from ..operators.star_schema import STAR_SCHEMAS, append_star, read_star_table
+from ..operators.star_schema import append_star, read_star
 from ..sources.events import read_raw_events_stream
 from .throttle import THROTTLE_OUTPUT_SCHEMA, throttle_sends
 
@@ -65,12 +65,6 @@ def _append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = N
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def _read_or_none(spark: SparkSession, star_dir: str, name: str) -> DataFrame | None:
-    if not os.path.exists(f"{star_dir}/{name}"):
-        return None
-    return read_star_table(spark, star_dir, name)
 
 
 def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
@@ -112,11 +106,7 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             # once: the fact feeds both the anti-join below and the new
             # fact_ids' offset.
             star_dir = f"{warehouse_dir}/star"
-            existing = {
-                name: df
-                for name in STAR_SCHEMAS
-                if (df := _read_or_none(spark, star_dir, name)) is not None
-            }
+            existing = read_star(spark, star_dir)
 
             # T5 — idempotency: batch-internal dedup, then anti-join
             # against facts already loaded (replayed batches drop out).

@@ -10,6 +10,11 @@ order:
   window boundary (lamda.py:264-269); a suppressed alert leaves the
   last send alone.
 
+Ordering contract: the fold is exact for alerts that arrive in event
+time order. An alert older than its key's last stored send (a
+straggler from a later micro-batch) meets a negative gap, so it is
+suppressed unless it is CRITICAL; a send cannot be taken back.
+
 The reference ships CONSECUTIVE_RECORDS_THRESHOLD = 1 (lamda.py:21),
 which makes its consecutive counter vestigial, so the throttle is
 purely time-based. Its 1-hour state purge (lamda.py:402-416) cannot

@@ -1,4 +1,5 @@
-"""Star-schema ETL: dims, fact join invariant, watermark, incremental."""
+"""Star-schema ETL: the in-memory star (``build_star``), the on-disk
+append (``append_star`` + ``read_star``), and their parity."""
 
 from __future__ import annotations
 
@@ -8,13 +9,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from iot_real_time_data_pipeline_spark.operators.star_schema import (
-    build_fact,
-    incremental_load,
-    new_dim_location,
-    new_dim_soil,
-    new_dim_time,
-    new_dim_weather,
-    watermark_filter,
+    append_star,
+    build_star,
+    read_star,
 )
 from iot_real_time_data_pipeline_spark.schemas import staging_schema
 
@@ -48,12 +45,12 @@ def batch1(spark):
 
 def test_fact_count_equals_staging_count(batch1):
     """SURVEY §7.3 — the double-equality dim joins must drop nothing."""
-    out = incremental_load(batch1, existing=None, dense_keys=True)
+    out = build_star(batch1, dense_keys=True)
     assert out["fact_sensor_readings"].count() == batch1.count()
 
 
 def test_dim_distinct_and_keys(batch1):
-    out = incremental_load(batch1, existing=None, dense_keys=True)
+    out = build_star(batch1, dense_keys=True)
     soil = out["dim_soil"].collect()
     # e1/e2/e3 share (ph,n,p,k); e4 differs -> 2 rows, keys 1..2
     assert sorted(r.soil_key for r in soil) == [1, 2]
@@ -64,55 +61,101 @@ def test_dim_distinct_and_keys(batch1):
     assert all(r.year == 2024 and r.hour == 6 for r in time)
 
 
-def test_incremental_second_batch(spark, batch1):
-    first = incremental_load(batch1, existing=None, dense_keys=True)
-    existing = {k: v.localCheckpoint() for k, v in first.items()}
+def test_incremental_second_batch(spark, batch1, tmp_path):
+    star_dir = str(tmp_path / "star")
+    append_star(batch1, star_dir, read_star(spark, star_dir))
+    existing = read_star(spark, star_dir)
+    soil_keys = {r.soil_key for r in existing["dim_soil"].collect()}
+    evt_ids = {r.evt_id for r in existing["fact_sensor_readings"].collect()}
 
     batch2 = staging_rows(spark, [
-        # stale row (before watermark) must be filtered out
-        mk_row("e1b", "2024-03-01T05:59:00"),
         # new row, existing location + existing soil tuple
         mk_row("e5", "2024-03-01T06:10:00"),
         # new row, brand-new soil tuple
         mk_row("e6", "2024-03-01T06:11:00", ph=6.5, n=120.0),
     ])
-    out = incremental_load(batch2, existing=existing, dense_keys=True)
+    append_star(batch2, star_dir, existing)
+    out = read_star(spark, star_dir)
 
-    assert out["dim_location"].count() == 0  # both locs already present
-    new_soil = out["dim_soil"].collect()
+    assert out["dim_location"].count() == 2  # both locs already present
+    soil = out["dim_soil"].collect()
+    new_soil = [r for r in soil if r.soil_key not in soil_keys]
     assert len(new_soil) == 1  # only e6's tuple is new
-    assert new_soil[0].soil_key == 3  # continues from existing max
+    assert (new_soil[0].ph, new_soil[0].nitrogen) == (6.5, 120.0)
+    # sparse keys: above the stored max, and unique
+    assert new_soil[0].soil_key > max(soil_keys)
+    assert len({r.soil_key for r in soil}) == len(soil)
     fact = out["fact_sensor_readings"].collect()
-    assert sorted(r.evt_id for r in fact) == ["e5", "e6"]  # e1b filtered
-
-
-def test_watermark_epoch_fallback(batch1):
-    assert watermark_filter(batch1, None).count() == batch1.count()
+    assert sorted(r.evt_id for r in fact if r.evt_id not in evt_ids) == ["e5", "e6"]
 
 
 def test_empty_batch_short_circuit(spark, batch1):
     """P5 — an empty staging batch yields empty outputs everywhere."""
     empty = staging_rows(spark, []).filter(F.lit(False))
-    out = incremental_load(empty, existing=None)
+    out = build_star(empty)
     assert out["fact_sensor_readings"].isEmpty()
     assert out["dim_soil"].isEmpty()
 
 
 def test_sparse_keys_are_unique(spark, batch1):
-    out = incremental_load(batch1, existing=None, dense_keys=False)
+    out = build_star(batch1)
     keys = [r.soil_key for r in out["dim_soil"].collect()]
     assert len(keys) == len(set(keys))
     fact_ids = [r.fact_id for r in out["fact_sensor_readings"].collect()]
     assert len(fact_ids) == len(set(fact_ids))
 
 
-def test_fact_id_offsets_across_loads(spark, batch1):
+def test_fact_id_offsets_across_loads(spark, batch1, tmp_path):
     """fact_id is an IDENTITY PK (Creating Tables.sql:37): uniqueness must
     hold across incremental cycles, not just within one batch."""
-    first = incremental_load(batch1, existing=None, dense_keys=True)
-    existing = {k: v.localCheckpoint() for k, v in first.items()}
+    star_dir = str(tmp_path / "star")
+    append_star(batch1, star_dir, read_star(spark, star_dir))
+    existing = read_star(spark, star_dir)
+    ids1 = {r.fact_id for r in existing["fact_sensor_readings"].collect()}
     batch2 = staging_rows(spark, [mk_row("e9", "2024-03-01T07:00:00")])
-    second = incremental_load(batch2, existing=existing, dense_keys=True)
-    ids1 = {r.fact_id for r in first["fact_sensor_readings"].collect()}
-    ids2 = {r.fact_id for r in second["fact_sensor_readings"].collect()}
-    assert ids1.isdisjoint(ids2)
+    append_star(batch2, star_dir, existing)
+    fact = read_star(spark, star_dir)["fact_sensor_readings"].collect()
+    ids2 = {r.fact_id for r in fact if r.evt_id == "e9"}
+    assert len(ids2) == 1 and ids1.isdisjoint(ids2)
+
+
+# dim table -> the fact column that references it
+FACT_KEYS = {
+    "dim_location": "location_key",
+    "dim_time": "full_date",
+    "dim_soil": "soil_key",
+    "dim_weather": "weather_key",
+}
+SURROGATES = {"location_key", "soil_key", "weather_key", "fact_id"}
+
+
+def _business(row: dict) -> tuple:
+    return tuple(sorted((k, v) for k, v in row.items() if k not in SURROGATES))
+
+
+def _business_rows(star):
+    """Dim business tuples and fact rows, each fact foreign key replaced
+    by the business tuple of the one dim row it resolves to."""
+    dims = {}
+    for name, key in FACT_KEYS.items():
+        rows = [r.asDict() for r in star[name].collect()]
+        dims[name] = {r[key]: _business(r) for r in rows}
+        assert len(dims[name]) == len(rows), f"{name}: duplicate {key}"
+    fact = []
+    for row in (r.asDict() for r in star["fact_sensor_readings"].collect()):
+        for name, key in FACT_KEYS.items():
+            assert row[key] in dims[name], f"fact {key} {row[key]} unresolved"
+            row[name] = dims[name][row[key]]
+        fact.append(_business(row))
+    return {name: sorted(d.values()) for name, d in dims.items()}, sorted(fact)
+
+
+def test_build_star_matches_append_star(spark, batch1, tmp_path):
+    """One meaning, two write modes: the in-memory star and the one
+    appended to disk hold the same dim tuples and fact rows."""
+    star_dir = str(tmp_path / "star")
+    append_star(batch1, star_dir, read_star(spark, star_dir))
+    on_disk = _business_rows(read_star(spark, star_dir))
+    in_memory = _business_rows(build_star(batch1))
+    assert on_disk == in_memory
+    assert len(on_disk[1]) == batch1.count()

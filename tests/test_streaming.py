@@ -69,6 +69,18 @@ def test_throttle_stateful_greedy(spark):
     # e3 (batch 2) is 400s past e1's send, carried in from batch 1.
     assert {r.event_id for r in sent_rows} == {"e1", "e3", "e4", "e5", "e6"}
 
+    # Stragglers older than the key's last stored send (06:10): the
+    # HIGH one is suppressed, the CRITICAL one still sends.
+    history = spark.createDataFrame(
+        [("loc_3", "High Temperature", "h1", "HIGH", "d", ts(10))],
+        THROTTLE_OUTPUT_SCHEMA,
+    )
+    late = spark.createDataFrame([
+        ("s1", "loc_3", ts(0), "High Temperature", "HIGH", "d"),
+        ("s2", "loc_3", ts(1), "High Temperature", "CRITICAL", "d"),
+    ], ALERT_SCHEMA)
+    assert [r.event_id for r in throttle_sends(late, history).collect()] == ["s2"]
+
 
 def test_throttle_stateful_replay_matches_greedy(spark):
     """The batch replay's counters: same sends as
