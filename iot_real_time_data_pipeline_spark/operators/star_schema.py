@@ -9,12 +9,13 @@ semantics, see SURVEY §3.3):
 - each dim = SELECT DISTINCT over its business columns with the SQL's
   NULL guards, minus rows already present (NOT IN / NOT EXISTS ->
   ``left_anti``), plus a surrogate key (INT IDENTITY, see
-  ``_assign_keys``);
-- the fact = the staging batch inner-joined to all four dims on the
-  SQL's exact keys — including the unusual 4- and 6-column *double
-  equality* keys (Transforming Tables.sql:87-99). Doubles are carried
-  end-to-end (never re-parsed through strings), so bit-identical
-  equality holds and the inner joins drop nothing (SURVEY §7.3).
+  ``_assign_keys``) above the stored max key;
+- the fact = the staging batch inner-joined to dim_location, dim_soil
+  and dim_weather on the SQL's exact keys — including the unusual 4-
+  and 6-column *double equality* keys (Transforming Tables.sql:87-99).
+  Doubles are carried end-to-end (never re-parsed through strings), so
+  bit-identical equality holds and the inner joins drop nothing (SURVEY
+  §7.3). ``full_date`` is the staging timestamp (see ``build_fact``).
 
 One composition (``_new_dims`` + ``build_fact`` over the rows with a
 timestamp), two write modes, and one reader:
@@ -41,6 +42,7 @@ assignment parallel; dense keys need a single-partition window.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -76,40 +78,57 @@ STAR_SCHEMAS = {
     "fact_sensor_readings": fact_schema,
 }
 
+# Keyed star table -> its surrogate key column (dim_time has none).
+KEY_COLUMNS = {
+    "dim_location": "location_key",
+    "dim_soil": "soil_key",
+    "dim_weather": "weather_key",
+    "fact_sensor_readings": "fact_id",
+}
+
+
+def _key_offsets(existing: dict[str, DataFrame]) -> dict[str, int]:
+    """Each keyed table's largest stored surrogate key, by table name,
+    read in one driver action over the union of the four key columns.
+    A table that is absent from ``existing`` or holds no rows gives 0,
+    and an empty ``existing`` launches no job."""
+    offsets = dict.fromkeys(KEY_COLUMNS, 0)
+    keys = [
+        existing[name].select(F.lit(name).alias("table"), F.col(key).alias("key"))
+        for name, key in KEY_COLUMNS.items()
+        if name in existing
+    ]
+    if keys:
+        union = functools.reduce(DataFrame.unionByName, keys)
+        for row in union.groupBy("table").agg(F.max("key").alias("m")).collect():
+            offsets[row.table] = row.m or 0
+    return offsets
+
 
 def _assign_keys(
-    new_rows: DataFrame, key_name: str, existing: DataFrame | None, dense_keys: bool
+    new_rows: DataFrame, key_name: str, offset: int, dense_keys: bool
 ) -> DataFrame:
     """Surrogate keys for a batch of new dim rows.
 
     Default ``dense_keys=False``: ``monotonically_increasing_id`` offset
-    above the existing max — fully parallel, non-contiguous, the 100 TB
-    path (IDENTITY guarantees uniqueness only, so this is
+    above ``offset`` (the stored max) — fully parallel, non-contiguous,
+    the 100 TB path (IDENTITY guarantees uniqueness only, so this is
     contract-preserving). ``dense_keys=True`` switches to contiguous ints
     via a single-partition row_number window; it exists ONLY for the
     DuckDB oracle gate, where surrogate key VALUES must reproduce
     deterministically (entrypoints.iot_star passes it explicitly).
     """
     order_cols = [c for c in new_rows.columns]
-    if existing is not None:
-        base = existing.agg(F.coalesce(F.max(key_name), F.lit(0)).alias("m"))
-    else:
-        base = None
-
     if dense_keys:
         w = Window.orderBy(*order_cols)
-        keyed = new_rows.withColumn(key_name, F.row_number().over(w).cast("long"))
+        key = F.row_number().over(w).cast("long")
     else:
-        keyed = new_rows.withColumn(key_name, F.monotonically_increasing_id() + 1)
-    if base is not None:
-        keyed = keyed.crossJoin(F.broadcast(base)).withColumn(
-            key_name, F.col(key_name) + F.col("m")
-        ).drop("m")
-    return keyed.select(key_name, *order_cols)
+        key = F.monotonically_increasing_id() + 1
+    return new_rows.select((key + offset).alias(key_name), *order_cols)
 
 
 def new_dim_location(staging: DataFrame, existing: DataFrame | None = None,
-                     dense_keys: bool = False) -> DataFrame:
+                     offset: int = 0, dense_keys: bool = False) -> DataFrame:
     """s3-to-redshift.py:80-86 — DISTINCT + ``loc_id NOT IN (dim)``.
 
     Note the reference's anti-join key is *loc_id alone*, not the full
@@ -124,7 +143,7 @@ def new_dim_location(staging: DataFrame, existing: DataFrame | None = None,
         rows = rows.join(
             F.broadcast(existing.select("loc_id")), on="loc_id", how="left_anti"
         )
-    return _assign_keys(rows, "location_key", existing, dense_keys)
+    return _assign_keys(rows, "location_key", offset, dense_keys)
 
 
 def new_dim_time(staging: DataFrame, existing: DataFrame | None = None) -> DataFrame:
@@ -150,7 +169,7 @@ def new_dim_time(staging: DataFrame, existing: DataFrame | None = None) -> DataF
 
 
 def new_dim_soil(staging: DataFrame, existing: DataFrame | None = None,
-                 dense_keys: bool = False) -> DataFrame:
+                 offset: int = 0, dense_keys: bool = False) -> DataFrame:
     """s3-to-redshift.py:104-120 — DISTINCT 4-double tuple + NOT EXISTS."""
     cond = None
     for c in DIM_SOIL_KEY_COLS:
@@ -159,11 +178,11 @@ def new_dim_soil(staging: DataFrame, existing: DataFrame | None = None,
     rows = staging.filter(cond).select(*DIM_SOIL_KEY_COLS).distinct()
     if existing is not None:
         rows = rows.join(existing.select(*DIM_SOIL_KEY_COLS), on=DIM_SOIL_KEY_COLS, how="left_anti")
-    return _assign_keys(rows, "soil_key", existing, dense_keys)
+    return _assign_keys(rows, "soil_key", offset, dense_keys)
 
 
 def new_dim_weather(staging: DataFrame, existing: DataFrame | None = None,
-                    dense_keys: bool = False) -> DataFrame:
+                    offset: int = 0, dense_keys: bool = False) -> DataFrame:
     """s3-to-redshift.py:123-148 — DISTINCT 6-double tuple + NOT EXISTS.
 
     NULL guard is on weather_temperature_2m only (sql:45) — exact.
@@ -177,43 +196,53 @@ def new_dim_weather(staging: DataFrame, existing: DataFrame | None = None,
         rows = rows.join(
             existing.select(*DIM_WEATHER_KEY_COLS), on=DIM_WEATHER_KEY_COLS, how="left_anti"
         )
-    return _assign_keys(rows, "weather_key", existing, dense_keys)
+    return _assign_keys(rows, "weather_key", offset, dense_keys)
 
 
 def _new_dims(
-    new_data: DataFrame, existing: dict[str, DataFrame], dense_keys: bool = False
+    new_data: DataFrame,
+    existing: dict[str, DataFrame],
+    offsets: dict[str, int],
+    dense_keys: bool = False,
 ) -> dict[str, DataFrame]:
     """Each dim's new rows for ``new_data``; ``existing`` maps table name
-    -> its stored contents (absent tables count as empty)."""
+    -> its stored contents (absent tables count as empty), ``offsets``
+    each table's stored max key (``_key_offsets``)."""
     return {
-        "dim_location": new_dim_location(new_data, existing.get("dim_location"), dense_keys),
+        "dim_location": new_dim_location(
+            new_data, existing.get("dim_location"), offsets["dim_location"], dense_keys
+        ),
         "dim_time": new_dim_time(new_data, existing.get("dim_time")),
-        "dim_soil": new_dim_soil(new_data, existing.get("dim_soil"), dense_keys),
-        "dim_weather": new_dim_weather(new_data, existing.get("dim_weather"), dense_keys),
+        "dim_soil": new_dim_soil(
+            new_data, existing.get("dim_soil"), offsets["dim_soil"], dense_keys
+        ),
+        "dim_weather": new_dim_weather(
+            new_data, existing.get("dim_weather"), offsets["dim_weather"], dense_keys
+        ),
     }
 
 
 def build_fact(
-    staging: DataFrame,
-    dims: dict[str, DataFrame],
-    existing_fact: DataFrame | None = None,
+    staging: DataFrame, dims: dict[str, DataFrame], offset: int = 0
 ) -> DataFrame:
-    """The 4-way fact join (Transforming Tables.sql:47-102, J1-J4)
-    against ``dims`` (dim table name -> rows carrying its keys).
+    """The fact join (Transforming Tables.sql:47-102, J1-J4) against
+    ``dims`` (dim table name -> rows carrying its keys).
 
     dim_location broadcasts (3 rows). The measurement dims join on
     their double-tuple keys — plain shuffled hash joins that AQE can
-    re-plan; no driver-side loops, no UDFs.
+    re-plan; no driver-side loops, no UDFs. J4 (``v.timestamp =
+    t.full_date``) is not planned: ``staging`` holds only rows with a
+    timestamp and dim_time holds each of them once, so it is an identity
+    and ``full_date`` is the staging timestamp.
 
     ``fact_id`` mirrors the IDENTITY PK (Creating Tables.sql:37):
-    unique across loads — new ids are offset above ``existing_fact``'s
-    max, same pattern as ``_assign_keys``.
+    unique across loads — new ids are offset above ``offset``, the
+    stored max, as in ``_assign_keys``.
     """
     v = staging.alias("v")
     l = dims["dim_location"].alias("l")
     w = dims["dim_weather"].alias("w")
     s = dims["dim_soil"].alias("s")
-    t = dims["dim_time"].alias("t")
 
     weather_cond = None
     for src, dst in WEATHER_RENAMES:
@@ -234,32 +263,21 @@ def build_fact(
         )
         .join(w, weather_cond, "inner")
         .join(s, soil_cond, "inner")
-        .join(t, F.col("v.timestamp") == F.col("t.full_date"), "inner")
     )
-    fact = joined.select(
+    return joined.select(
         # fact_id INT IDENTITY (Creating Tables.sql:37) — IDENTITY
         # guarantees uniqueness only; fully-parallel assignment.
-        (F.monotonically_increasing_id() + 1).alias("fact_id"),
+        (F.monotonically_increasing_id() + 1 + offset).alias("fact_id"),
         F.col("v.event_id").alias("evt_id"),
         F.col("l.location_key").alias("location_key"),
         F.col("w.weather_key").alias("weather_key"),
         F.col("s.soil_key").alias("soil_key"),
-        F.col("t.full_date").alias("full_date"),
+        F.col("v.timestamp").alias("full_date"),
         F.col("v.temperature").alias("soil_temperature"),
         F.col("v.humidity").alias("soil_humidity"),
         F.col("v.water_level").alias("water_level"),
         F.col("v.validation_status").alias("validation_status"),
     )
-    if existing_fact is not None:
-        base = existing_fact.agg(
-            F.coalesce(F.max("fact_id"), F.lit(0).cast("long")).alias("_m")
-        )
-        fact = (
-            fact.crossJoin(F.broadcast(base))
-            .withColumn("fact_id", F.col("fact_id") + F.col("_m"))
-            .drop("_m")
-        )
-    return fact
 
 
 def build_star(staging: DataFrame, dense_keys: bool = False) -> dict[str, DataFrame]:
@@ -273,7 +291,7 @@ def build_star(staging: DataFrame, dense_keys: bool = False) -> dict[str, DataFr
     shares it across the driver queries that rebuild the star.
     """
     new_data = staging.filter(F.col("timestamp").isNotNull()).persist()
-    dims = _new_dims(new_data, {}, dense_keys)
+    dims = _new_dims(new_data, {}, _key_offsets({}), dense_keys)
     return {**dims, "fact_sensor_readings": build_fact(new_data, dims)}
 
 
@@ -299,11 +317,14 @@ def append_star(
     then the fact joined against the dims as written, read back after
     their appends. The fact thus carries the stored surrogate keys, and
     its write does not re-run the new-dim plans (distinct, anti-join,
-    max key, ``monotonically_increasing_id``) as an in-plan union would.
+    ``monotonically_increasing_id``) as an in-plan union would.
 
     ``existing`` (``read_star`` before this batch) maps table name ->
-    its contents; its ``fact_sensor_readings`` sets the ``fact_id``
-    offset.
+    its contents. The four surrogate key offsets (three dims and
+    ``fact_id``) are read from it once per batch, in one driver action
+    (``_key_offsets``), and enter the plans as literals. ``staging`` is
+    not cached here: the loader passes a narrow map of its cached lake
+    frame, so a second cache would only cost a job.
 
     No T4 watermark: the caller's evt_id anti-join already makes the
     load exactly-once, and the watermark would drop late or out-of-order
@@ -311,14 +332,11 @@ def append_star(
     NULL-timestamp rejection is kept.
     """
     spark = staging.sparkSession
-    # Reused by the four dim builds and the fact join.
-    new_data = staging.filter(F.col("timestamp").isNotNull()).persist()
-    try:
-        stored = {}
-        for name, rows in _new_dims(new_data, existing).items():
-            rows.write.mode("append").parquet(f"{star_dir}/{name}")
-            stored[name] = _read_table(spark, star_dir, name)
-        fact = build_fact(new_data, stored, existing.get("fact_sensor_readings"))
-        fact.write.mode("append").parquet(f"{star_dir}/fact_sensor_readings")
-    finally:
-        new_data.unpersist()
+    offsets = _key_offsets(existing)
+    new_data = staging.filter(F.col("timestamp").isNotNull())
+    stored = {}
+    for name, rows in _new_dims(new_data, existing, offsets).items():
+        rows.write.mode("append").parquet(f"{star_dir}/{name}")
+        stored[name] = _read_table(spark, star_dir, name)
+    fact = build_fact(new_data, stored, offsets["fact_sensor_readings"])
+    fact.write.mode("append").parquet(f"{star_dir}/fact_sensor_readings")

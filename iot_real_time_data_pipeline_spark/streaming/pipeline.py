@@ -21,6 +21,16 @@ which the reference lacks) -> per-micro-batch:
 - incremental star-schema load (S10) appending the new dim rows, then
   the fact joined against the dims as written (``append_star``).
 
+Sink order: lake, alerts, dead letters, then the star (four dims, then
+the fact). A write re-caches every cached frame that reads its path
+(Spark's ``recacheByPath``): the next use of such a frame re-runs its
+plan over the grown directory. So each cached frame is consumed before
+a write to a path it reads. The cached sends read the alerts sink as
+the throttle's history: the lake's ``alerts_sent`` join consumes them
+before the alerts append, since a fold re-run after it would see this
+batch's own sends and suppress them. The cached lake frame reads the
+fact for its anti-join, and the fact is written last.
+
 Checkpointing gives exactly-once micro-batch replay; the evt_id
 anti-join against the stored fact keeps a replayed batch out of the
 lake and the star.
@@ -103,8 +113,8 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             routed = route(processed)
 
             # The star as it stands before this batch, each table read
-            # once: the fact feeds both the anti-join below and the new
-            # fact_ids' offset.
+            # once: the fact feeds the anti-join below, and append_star
+            # reads every surrogate key offset from it in one action.
             star_dir = f"{warehouse_dir}/star"
             existing = read_star(spark, star_dir)
 
@@ -122,8 +132,9 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
 
             # S7 — throttled alerts: the alerts sink, read with its
             # declared schema before this batch appends, carries each
-            # key's last send into the fold. Computed before the lake
-            # write so sent alerts can be joined back onto lake rows.
+            # key's last send into the fold. The cached sends feed the
+            # lake's alerts_sent before the alerts append re-caches them
+            # (see "Sink order" above).
             alerts_dir = f"{warehouse_dir}/alerts"
             history = (
                 spark.read.schema(THROTTLE_OUTPUT_SCHEMA).parquet(alerts_dir)
@@ -131,7 +142,6 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
                 else None
             )
             alerts = throttle_sends(exploded_alerts(lake), history).persist()
-            _append_parquet(alerts, alerts_dir)
 
             # alerts_sent write-back (lamda.py:465-471): each lake row
             # learns which of its alerts actually cleared the throttle.
@@ -167,12 +177,13 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
                             ["validation_status", "loc_id_part", "date"])
             if jsonl_mirror:  # S4 — debug JSONL mirror of the stream
                 flat.write.mode("append").json(f"{warehouse_dir}/lake_jsonl")
+            _append_parquet(alerts, alerts_dir)
+            alerts.unpersist()
             # S6 — dead letters, partitioned by error class like the
             # reference's errors/json_decode/ vs errors/processing/
             # prefixes (lamda.py:488-530).
             _append_parquet(routed["dead_letter"], f"{warehouse_dir}/dead_letter",
                             ["error_type"])
-            alerts.unpersist()
 
             # S10 — star-schema append: dims, then the fact against
             # the dims as written.

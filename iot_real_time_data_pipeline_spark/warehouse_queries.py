@@ -1205,6 +1205,20 @@ SELECT fact_rows, dim_rows, n_fact_keys, n_dim_keys, max_fact_key_rows,
 FROM fs, ds, jr"""
 
 
+def _bucketed_tables(app_id: str, sf_dir: str) -> tuple[str, str]:
+    """The bucketed lineitem and orders table names of one Spark
+    application over one corpus. The FULL corpus path, not the post-'sf'
+    suffix: corpora whose dirs share a suffix ('degenerate_sf0' vs
+    'empty_sf0') must not share tables. The application id: processes
+    started from one checkout share its ``spark-warehouse/``.
+    """
+    import hashlib
+
+    key = f"{app_id}\0{os.path.abspath(sf_dir)}"
+    tag = hashlib.sha1(key.encode("utf-8")).hexdigest()[:12]
+    return f"wh_li_bkt_{tag}", f"wh_o_bkt_{tag}"
+
+
 def q_q12_bucketed(spark, sf_dir):
     """Q12 over BUCKETED fact tables — the 100 TB fact↔fact join as a
     first-class oracle-checked query rather than a synthetic plan
@@ -1222,22 +1236,15 @@ def q_q12_bucketed(spark, sf_dir):
     """
     from .functions.skew import read_bucketed, write_bucketed
 
-    # Tag by the FULL corpus path, not the post-'sf' suffix: distinct
-    # corpora whose dirs share a suffix ('degenerate_sf0' vs 'empty_sf0')
-    # must not reuse each other's session-cached bucketed tables.
-    import hashlib
-
-    tag = hashlib.sha1(
-        os.path.abspath(sf_dir).encode("utf-8")
-    ).hexdigest()[:12]
-    li_tbl, o_tbl = f"wh_li_bkt_{tag}", f"wh_o_bkt_{tag}"
+    li_tbl, o_tbl = _bucketed_tables(spark.sparkContext.applicationId, sf_dir)
     for name, tbl in (("lineitem", li_tbl), ("orders", o_tbl)):
-        # in-memory catalog: a fresh session re-writes; within a
-        # session the table persists. A PREVIOUS session's directory
-        # may survive under spark-warehouse without a catalog entry
-        # (LOCATION_ALREADY_EXISTS) — it is session-scratch data, so
-        # drop the stale location and rebuild.
+        # in-memory catalog: within an application the table persists.
+        # Its directory under spark-warehouse is this application's
+        # scratch data, removed when the process exits; one without a
+        # catalog entry is left by a failed write (LOCATION_ALREADY_EXISTS),
+        # so drop it and rebuild.
         if not spark.catalog.tableExists(tbl):
+            import atexit
             import shutil
             from urllib.parse import urlparse
 
@@ -1246,7 +1253,9 @@ def q_q12_bucketed(spark, sf_dir):
                     "spark.sql.warehouse.dir", "spark-warehouse"
                 )
             ).path
-            shutil.rmtree(os.path.join(wh_dir, tbl), ignore_errors=True)
+            path = os.path.join(wh_dir, tbl)
+            shutil.rmtree(path, ignore_errors=True)
+            atexit.register(shutil.rmtree, path, True)
             write_bucketed(
                 _t(spark, sf_dir, name),
                 tbl,

@@ -1154,3 +1154,15 @@ def test_q12_bucketed_join_has_no_join_exchange(spark):
     for t in spark.catalog.listTables():
         if t.name.startswith(("wh_li_bkt", "wh_o_bkt")):
             spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+
+
+def test_q12_bucketed_tables_are_per_application():
+    """Two applications over one corpus get different bucketed table
+    names, so neither drops the other's files; one application keeps
+    one name per corpus."""
+    from iot_real_time_data_pipeline_spark.warehouse_queries import _bucketed_tables
+
+    one = _bucketed_tables("local-1", SF_DIR)
+    assert one == _bucketed_tables("local-1", SF_DIR)
+    assert set(one).isdisjoint(_bucketed_tables("local-2", SF_DIR))
+    assert set(one).isdisjoint(_bucketed_tables("local-1", SF_DIR + "_other"))

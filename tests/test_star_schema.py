@@ -9,6 +9,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from iot_real_time_data_pipeline_spark.operators.star_schema import (
+    KEY_COLUMNS,
+    STAR_SCHEMAS,
+    _key_offsets,
     append_star,
     build_star,
     read_star,
@@ -117,6 +120,36 @@ def test_fact_id_offsets_across_loads(spark, batch1, tmp_path):
     fact = read_star(spark, star_dir)["fact_sensor_readings"].collect()
     ids2 = {r.fact_id for r in fact if r.evt_id == "e9"}
     assert len(ids2) == 1 and ids1.isdisjoint(ids2)
+
+
+def test_key_offsets_on_empty_tables(spark, batch1, tmp_path):
+    """Onto a star whose tables exist but hold no rows, every key offset
+    is 0 and the appended keys are unique; no tables at all gives the
+    same offsets without a job. After the append, each offset is its
+    table's stored max key."""
+    sc = spark.sparkContext
+    next_job = sc._jsc.sc().dagScheduler().nextJobId
+    zeros = dict.fromkeys(KEY_COLUMNS, 0)
+    job0 = next_job()
+    assert _key_offsets({}) == zeros
+    assert next_job() == job0
+
+    star_dir = str(tmp_path / "star")
+    for name, schema in STAR_SCHEMAS.items():
+        spark.createDataFrame([], schema()).write.parquet(f"{star_dir}/{name}")
+    existing = read_star(spark, star_dir)
+    assert set(existing) == set(STAR_SCHEMAS)
+    assert _key_offsets(existing) == zeros
+
+    append_star(batch1, star_dir, existing)
+    out = read_star(spark, star_dir)
+    assert out["fact_sensor_readings"].count() == batch1.count()
+    maxima = {}
+    for name, key in KEY_COLUMNS.items():
+        keys = [r[key] for r in out[name].collect()]
+        assert keys and min(keys) >= 1 and len(keys) == len(set(keys)), name
+        maxima[name] = max(keys)
+    assert _key_offsets(out) == maxima
 
 
 # dim table -> the fact column that references it
