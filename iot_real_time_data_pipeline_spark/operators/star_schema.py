@@ -26,7 +26,11 @@ timestamp), two write modes, and one reader:
   row_number; ``bench.py`` keeps the default sparse keys.
 - ``append_star``: one micro-batch appended under a star directory,
   the fact joined against the dims as written (the streaming loader,
-  sparse keys).
+  sparse keys). Surrogate key offsets are read from storage once per
+  query run (``_key_offsets``), then carried: each keyed append
+  observes the largest key it writes, and the caller passes the
+  returned offsets to the next batch (and re-reads them after a batch
+  that failed).
 - ``read_star``: the star tables on disk, each with its declared
   schema. No other module knows the star's table names or schemas.
 
@@ -45,7 +49,7 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..schemas import (
@@ -91,7 +95,8 @@ def _key_offsets(existing: dict[str, DataFrame]) -> dict[str, int]:
     """Each keyed table's largest stored surrogate key, by table name,
     read in one driver action over the union of the four key columns.
     A table that is absent from ``existing`` or holds no rows gives 0,
-    and an empty ``existing`` launches no job."""
+    and an empty ``existing`` launches no job. The only reader of the
+    key maxima from storage: ``append_star`` carries them otherwise."""
     offsets = dict.fromkeys(KEY_COLUMNS, 0)
     keys = [
         existing[name].select(F.lit(name).alias("table"), F.col(key).alias("key"))
@@ -207,7 +212,7 @@ def _new_dims(
 ) -> dict[str, DataFrame]:
     """Each dim's new rows for ``new_data``; ``existing`` maps table name
     -> its stored contents (absent tables count as empty), ``offsets``
-    each table's stored max key (``_key_offsets``)."""
+    each keyed table's stored max key (see ``append_star``)."""
     return {
         "dim_location": new_dim_location(
             new_data, existing.get("dim_location"), offsets["dim_location"], dense_keys
@@ -309,9 +314,26 @@ def read_star(spark: SparkSession, star_dir: str) -> dict[str, DataFrame]:
     }
 
 
+def _append(rows: DataFrame, star_dir: str, name: str) -> int | None:
+    """Append ``rows`` to ``star_dir/name``. For a keyed table, returns
+    the largest surrogate key written (None when no row was), observed
+    inside the write job, so it costs no job of its own."""
+    key = KEY_COLUMNS.get(name)
+    if key is None:
+        rows.write.mode("append").parquet(f"{star_dir}/{name}")
+        return None
+    written = Observation()
+    rows = rows.observe(written, F.max(key).alias("max_key"))
+    rows.write.mode("append").parquet(f"{star_dir}/{name}")
+    return written.get["max_key"]
+
+
 def append_star(
-    staging: DataFrame, star_dir: str, existing: dict[str, DataFrame]
-) -> None:
+    staging: DataFrame,
+    star_dir: str,
+    existing: dict[str, DataFrame],
+    offsets: dict[str, int] | None = None,
+) -> dict[str, int]:
     """Append one batch to the star under ``star_dir/<table>`` in the
     Glue job's order (s3-to-redshift.py:80-190): each dim's new rows,
     then the fact joined against the dims as written, read back after
@@ -320,11 +342,20 @@ def append_star(
     ``monotonically_increasing_id``) as an in-plan union would.
 
     ``existing`` (``read_star`` before this batch) maps table name ->
-    its contents. The four surrogate key offsets (three dims and
-    ``fact_id``) are read from it once per batch, in one driver action
-    (``_key_offsets``), and enter the plans as literals. ``staging`` is
-    not cached here: the loader passes a narrow map of its cached lake
-    frame, so a second cache would only cost a job.
+    its contents. ``offsets`` maps each keyed table (three dims and the
+    fact) to its largest stored surrogate key; the keys enter the plans
+    as literals above them. ``None`` reads them from ``existing`` in one
+    driver action (``_key_offsets``): the streaming loader does so once
+    per query run, and again after a batch that raised, because a
+    failed batch may have stored keys it never reported. Returns the
+    offsets after this batch: per table, the larger of the old offset
+    and the largest key its append wrote (observed in the write job; an
+    append of no rows keeps the old offset). Carrying them is sound only
+    while this caller is the star's only writer, which the loader's
+    evt_id anti-join already assumes.
+
+    ``staging`` is not cached here: the loader passes a narrow map of
+    its cached lake frame, so a second cache would only cost a job.
 
     No T4 watermark: the caller's evt_id anti-join already makes the
     load exactly-once, and the watermark would drop late or out-of-order
@@ -332,11 +363,14 @@ def append_star(
     NULL-timestamp rejection is kept.
     """
     spark = staging.sparkSession
-    offsets = _key_offsets(existing)
+    if offsets is None:
+        offsets = _key_offsets(existing)
     new_data = staging.filter(F.col("timestamp").isNotNull())
+    written = {}
     stored = {}
     for name, rows in _new_dims(new_data, existing, offsets).items():
-        rows.write.mode("append").parquet(f"{star_dir}/{name}")
+        written[name] = _append(rows, star_dir, name)
         stored[name] = _read_table(spark, star_dir, name)
     fact = build_fact(new_data, stored, offsets["fact_sensor_readings"])
-    fact.write.mode("append").parquet(f"{star_dir}/fact_sensor_readings")
+    written["fact_sensor_readings"] = _append(fact, star_dir, "fact_sensor_readings")
+    return {name: max(offset, written[name] or 0) for name, offset in offsets.items()}

@@ -36,16 +36,28 @@ anti-join against the stored fact keeps a replayed batch out of the
 lake and the star.
 
 History is read once per batch, each star table with its declared
-schema, so the reads launch no footer-inference job.
+schema, so the reads launch no footer-inference job. The star's
+surrogate key offsets are read from it once per query run, then
+carried from each batch's appends (``append_star``); a batch that
+raises drops them, and the next batch reads them again. So one
+warehouse takes one loader at a time: a loader's carried offsets go
+stale once another loader appends to the star, and its next batch would
+reuse surrogate keys. A new loader (a new query run) reads them afresh.
 
 Scale notes: every per-batch step is a narrow map or a key-bounded
 join. AQE coalesces the loader's cached frames like any other plan
 (``session.ENGINE_CONF``), so while a micro-batch fits one coalesced
 partition each lake, alerts and star directory gets one file per
 batch; dead letters, a narrow map of the input, keep its
-partitioning. The throttle's carried state is one timestamp per
-(loc_id, alert_type), reduced map-side from the alerts sink before its
-shuffle.
+partitioning. When the cached lake frame holds one partition, the star
+append reads it through ``coalesce(1)``, which marks it as one
+partition; that already satisfies each dim's ``distinct``, so the dim
+appends plan no shuffle. A batch large enough to keep several
+partitions (or one with no lake row) reads the cached frame as it is
+and gets the same shuffled plans as without the hint, so the hint never
+narrows a large batch's parallelism. The throttle's carried state is
+one timestamp per (loc_id, alert_type), reduced map-side from the
+alerts sink before its shuffle.
 """
 
 from __future__ import annotations
@@ -77,6 +89,18 @@ def _append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = N
     writer.parquet(path)
 
 
+def _one_partition_hint(frame: DataFrame) -> DataFrame:
+    """``frame`` coalesced to one partition when it holds exactly one,
+    else ``frame`` itself. The scan of a cached frame does not report a
+    single partition; ``coalesce(1)`` does, and that satisfies a later
+    ``distinct`` without a shuffle. Reading the count runs no job once
+    ``frame``'s cache is materialized. Any other count keeps the plan as
+    it is: ``coalesce`` rejects 0 (a batch none of whose events reaches
+    the lake may cache no partition), and above 1 it would add a
+    ``CoalesceExec`` that gains nothing."""
+    return frame.coalesce(1) if frame.rdd.getNumPartitions() == 1 else frame
+
+
 def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
     """Returns the foreachBatch callback wiring all sinks under
     ``warehouse_dir``: lake/, dead_letter/, alerts/, star/<table>/.
@@ -84,9 +108,18 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
     ``jsonl_mirror=True`` additionally appends the flat lake rows as
     line-delimited JSON under lake_jsonl/ — the reference producer's
     local debug mirror (S4, producer.py:446-447).
+
+    The callback carries the star's key offsets across batches, so it
+    must be the warehouse's only writer while it runs: after another
+    loader has appended to the same star, start a new one.
     """
+    # The star's surrogate key offsets, carried from each batch's star
+    # append to the next; None until the first batch reads them from
+    # storage, and again after a batch that raised.
+    offsets = None
 
     def _load(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal offsets
         spark = batch_df.sparkSession
         # P5 — empty-input short-circuit (s3-to-redshift.py:55-57):
         # empty micro-batches skip every sink write.
@@ -113,8 +146,8 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             routed = route(processed)
 
             # The star as it stands before this batch, each table read
-            # once: the fact feeds the anti-join below, and append_star
-            # reads every surrogate key offset from it in one action.
+            # once: the fact feeds the anti-join below, and the first
+            # append_star of a query run reads the key offsets from it.
             star_dir = f"{warehouse_dir}/star"
             existing = read_star(spark, star_dir)
 
@@ -186,9 +219,16 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
                             ["error_type"])
 
             # S10 — star-schema append: dims, then the fact against
-            # the dims as written.
-            append_star(to_staging(lake), star_dir, existing)
+            # the dims as written. The lake write materialized the
+            # cache, so its partition count is known without a job.
+            offsets = append_star(
+                to_staging(_one_partition_hint(lake)), star_dir, existing, offsets
+            )
             lake.unpersist()
+        except BaseException:
+            # A failed batch may have stored keys it never reported.
+            offsets = None
+            raise
         finally:
             flagged.unpersist()
 
@@ -204,7 +244,9 @@ def run_stream(
     available_now: bool = True,
     jsonl_mirror: bool = False,
 ):
-    """Wire the full streaming pipeline; returns the StreamingQuery."""
+    """Wire the full streaming pipeline; returns the StreamingQuery.
+    One query at a time may load ``warehouse_dir`` (see
+    ``foreach_batch_loader``)."""
     raw = read_raw_events_stream(spark, source_path, max_files_per_trigger)
     writer = (
         raw.writeStream.foreachBatch(

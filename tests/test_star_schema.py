@@ -152,6 +152,29 @@ def test_key_offsets_on_empty_tables(spark, batch1, tmp_path):
     assert _key_offsets(out) == maxima
 
 
+def test_carried_offsets_equal_storage(spark, batch1, tmp_path):
+    """The offsets ``append_star`` returns, carried into the next call,
+    equal the stored key maxima after every call: a batch that appends
+    no row to dim_location keeps its offset, and a batch of rows without
+    a timestamp appends no row anywhere and keeps them all."""
+    star_dir = str(tmp_path / "star")
+    batch2 = staging_rows(spark, [
+        # existing location and soil tuple, new weather tuple
+        mk_row("e5", "2024-03-01T06:10:00", wt=25.0),
+        mk_row("e6", "2024-03-01T06:11:00", ph=6.5, n=120.0),
+    ])
+    untimed = mk_row("e7", "2024-03-01T06:12:00", ph=6.0)
+    batch3 = staging_rows(spark, [(untimed[0], None, *untimed[2:])])
+    offsets = None
+    for batch in (batch1, batch2, batch3):
+        offsets = append_star(batch, star_dir, read_star(spark, star_dir), offsets)
+        star = read_star(spark, star_dir)
+        assert offsets == _key_offsets(star)
+    # batch2 and batch3 appended no location, batch3 no row at all
+    assert star["dim_location"].count() == 2
+    assert star["fact_sensor_readings"].count() == 6
+
+
 # dim table -> the fact column that references it
 FACT_KEYS = {
     "dim_location": "location_key",
