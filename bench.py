@@ -11,7 +11,8 @@ each oracle comparison is independent), the bench models a real
 deployment: the staging batch and star-schema tables are derived once,
 persisted, and every analytical query reads the cached tables —
 pipeline cost is paid once and reported as its own line items
-(``derive_staging``, ``build_star``).
+(``derive_staging``, ``build_star``). The LLM, events and warehouse
+families run every entry of their query registries (``FAMILIES``).
 
 Noise handling (round 4, revised round 7): every dashboard/LLM line
 item runs 3x in-session; ``queries`` and ``value`` now carry per-query
@@ -29,8 +30,18 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from iot_real_time_data_pipeline_spark import events_queries as EQ  # noqa: E402
+from iot_real_time_data_pipeline_spark import llm_queries as LQ  # noqa: E402
+from iot_real_time_data_pipeline_spark import warehouse_queries as WQ  # noqa: E402
+from iot_real_time_data_pipeline_spark.entrypoints import (  # noqa: E402
+    iot_staging,
+    read_table,
+)
 
 
 def _current_round_tag() -> str:
@@ -97,6 +108,66 @@ def suite_session(app_name: str, cpus: str):
     )
 
 
+def load_tables(spark, sf_dir: str, tables) -> None:
+    """Persist and materialize each base table's scan plan."""
+    for t in tables:
+        read_table(spark, sf_dir, t).persist().count()
+
+
+def prime_neardup_pairs(spark, sf_dir: str) -> None:
+    """Persist the banded-LSH candidate pairs at the default threshold:
+    the shared input of the dup-graph stack (dup_clusters,
+    canonical_best, pagerank, labelprop, detector_agreement, ...), which
+    each query would otherwise re-derive (shingles, signatures, bands,
+    verified pairs). The cache manager redirects every query's matching
+    subplan to the one InMemoryRelation."""
+    from iot_real_time_data_pipeline_spark.operators import dedup as DD
+
+    DD.minhash_lsh_pairs(
+        read_table(spark, sf_dir, "documents"), threshold=LQ.JACCARD_THRESHOLD
+    ).persist().count()
+
+
+class Family(NamedTuple):
+    """One query-registry family of the bench.
+
+    ``load_item`` names the line item that times the warm-up of
+    ``tables``; a ``primer`` is timed under its function name. A
+    ``cold_canary`` is one item re-run after the family's caches are
+    released, so each repeat pays the parquet scan the in-family items
+    read from cache: it keeps the warm-table accounting auditable, and
+    it is diagnostic (its work is already counted in the family).
+    """
+
+    name: str
+    load_item: str
+    tables: tuple[str, ...]
+    primer: Callable | None
+    registry: Callable[[], dict]
+    cold_canary: str | None
+
+
+FAMILIES = (
+    Family("llm", "load_corpus_tables", ("documents", "embeddings"),
+           prime_neardup_pairs, LQ.llm_queries, None),
+    Family("events", "load_events_tables", ("events",),
+           None, EQ.events_queries, "events_sessionize"),
+    Family("wh", "load_wh_tables",
+           ("lineitem", "orders", "customer", "part", "supplier", "nation",
+            "region"),
+           None, WQ.warehouse_queries, "wh_q1_pricing_summary"),
+)
+RELEASE_BLOCK = 25
+COLD_CANARY = "_cold_canary"
+
+
+def warm(spark, sf_dir: str, fam: Family) -> None:
+    """The family's warm context: base tables persisted, primer run."""
+    load_tables(spark, sf_dir, fam.tables)
+    if fam.primer is not None:
+        fam.primer(spark, sf_dir)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -105,8 +176,6 @@ def main() -> None:
     spark = suite_session("bench", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from iot_real_time_data_pipeline_spark import llm_queries as LQ
-    from iot_real_time_data_pipeline_spark.entrypoints import iot_staging
     from iot_real_time_data_pipeline_spark.operators import dashboard as D
     from iot_real_time_data_pipeline_spark.operators.star_schema import build_star
 
@@ -160,18 +229,12 @@ def main() -> None:
 
     codecache_bytes_before: dict[str, int] = {}
 
-    # Cache hygiene (opt-out via SPARK_GRAFT_BENCH_RELEASE=0): operator-
-    # internal persists (postings, band frames, fingerprints) deliberately
-    # outlive their operator (dedup.py's lazy-return rationale) — correct
-    # for a long-lived service, but across a 135-query session they pile
-    # up. At each family boundary, record how much storage memory the
-    # family left behind, then drop ALL SQL caches: the next family never
-    # reads the previous family's frames, so the only cost is the next
-    # family rebuilding its own caches (which its line items then honestly
-    # include). Peak storage per family lands in the detail JSON + PERF.md.
-    release_between_families = (
-        os.environ.get("SPARK_GRAFT_BENCH_RELEASE", "1") != "0"
-    )
+    # Cache hygiene: operator-internal persists (postings, band frames,
+    # fingerprints) deliberately outlive their operator (dedup.py's
+    # lazy-return rationale), which is right for a long-lived service, but
+    # across a whole-suite session they pile up. At each release (see the
+    # family loop) record how much storage memory was held, then drop ALL
+    # SQL caches. Peak storage per block lands in the detail JSON.
     storage_bytes_at_release: dict[str, int] = {}
 
     def release_caches(tag: str) -> None:
@@ -179,18 +242,12 @@ def main() -> None:
             release_session_caches,
         )
 
-        if release_between_families:
-            storage_bytes_at_release[tag] = release_session_caches(spark)
-        else:
-            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            storage_bytes_at_release[tag] = int(
-                sum(i.memSize() for i in infos)
-            )
+        storage_bytes_at_release[tag] = release_session_caches(spark)
 
-    def timed(name: str, fn):
+    def timed(name: str, fn, *args):
         g0 = _gc_ms()
         t0 = time.perf_counter()
-        out = fn()
+        out = fn(*args)
         times[name] = round(time.perf_counter() - t0, 3)
         gc_ms[name] = [_gc_ms() - g0]
         return out
@@ -266,19 +323,8 @@ def main() -> None:
         to_staging(attach_validation_arrays(with_alerts(flagged))).count()
 
     timed("derive_staging_warm", _derive_warm)
-    DIAGNOSTIC_ITEMS = {
-        "derive_staging_warm",
-        # Isolated dup-graph re-measurements (see the iso_ block below):
-        # the work is already counted by the in-block line items.
-        "iso_docs_pagerank", "iso_docs_labelprop_communities",
-        "iso_docs_detector_agreement",
-        # Cold canaries (round 13, VERDICT r12 item 7): one events and
-        # one wh item re-run AFTER the family cache release, i.e. on an
-        # unpersisted scan — the pre-r12 per-item cost model — so future
-        # round-over-round family deltas stay interpretable against the
-        # warm-table accounting. Diagnostic: their work is already
-        # counted once by the in-family line items.
-        "events_sessionize_cold_canary", "wh_q1_pricing_summary_cold_canary",
+    DIAGNOSTIC_ITEMS = {"derive_staging_warm"} | {
+        fam.cold_canary + COLD_CANARY for fam in FAMILIES if fam.cold_canary
     }
 
     # --- star build (once, cached) ----------------------------------------
@@ -333,254 +379,33 @@ def main() -> None:
 
     release_caches("after_iot_dashboard")
 
-    # --- LLM-data operators ----------------------------------------------
-    # Warm deployment model: the corpus tables are hot. Persisting the
-    # same scan plan the queries build lets Spark's cache manager
-    # redirect every query's scan to the shared InMemoryRelation; the
-    # load cost is reported as its own line item.
-    from iot_real_time_data_pipeline_spark.entrypoints import read_table
-
-    def _load_corpus():
-        for t in ("documents", "embeddings"):
-            read_table(spark, sf_dir, t).persist().count()
-
-    timed("load_corpus_tables", _load_corpus)
-
-    # Family-scoped near-dup edge frame (round 10, VERDICT r9 item 6):
-    # the banded-LSH candidate pairs at the default threshold are the
-    # shared input of the dup-graph stack (dup_clusters, canonical_best,
-    # pagerank, labelprop, dup_graph_stats, detector_agreement, ...) —
-    # each was silently re-deriving shingles → signatures → bands →
-    # verified pairs. Persisting the pairs plan once lets Spark's cache
-    # manager redirect every query's matching subplan to the
-    # InMemoryRelation. Priming cost is paid and reported HERE as its
-    # own line item (the load_corpus_tables accounting pattern); the
-    # block-boundary cache releases re-warm it untimed below.
-    def _prime_pairs():
-        from iot_real_time_data_pipeline_spark.operators import dedup as DD
-
-        pairs = DD.minhash_lsh_pairs(
-            read_table(spark, sf_dir, "documents"),
-            threshold=LQ.JACCARD_THRESHOLD,
-        ).persist()
-        pairs.count()
-
-    timed("prime_neardup_pairs", _prime_pairs)
-
-
-    # The LLM family is ~115 line items in one block: by round 8 its
-    # tail queries rode ~90 queries' worth of accumulated operator-
-    # internal persists, and twice in two rounds a tail query read
-    # 5-9x its isolated A/B (r7 mm_wav_decimate, r8
-    # docs_jaccard_threshold_sweep — both fine in a fresh JVM). Cap
-    # the accumulation: release ALL caches every LLM_RELEASE_BLOCK
-    # queries, then re-warm the two corpus-table persists UNTIMED
-    # (their load cost was already paid and reported once as
-    # load_corpus_tables; related operator pairs sit adjacently in the
-    # list, so intra-block cache reuse survives).
-    LLM_RELEASE_BLOCK = 25
-    for _i, name in enumerate([
-        "docs_exact_dedup",
-        "docs_shingle_jaccard_pairs",
-        "docs_minhash_lsh_pairs",
-        "docs_containment_pairs",
-        "docs_simhash",
-        "docs_simhash_dup_pairs",
-        "docs_simhash_dup_pairs_prod",
-        "docs_decontaminate",
-        "docs_decontaminated_corpus",
-        "docs_dup_clusters",
-        "docs_stratified_sample",
-        "docs_stratified_sample_exact",
-        "docs_pii_scrub",
-        "docs_boilerplate_scrub",
-        "docs_curation",
-        "docs_source_mix",
-        "docs_source_lang_matrix",
-        "docs_rebalanced_sample",
-        "docs_repetition_stats",
-        "docs_char_entropy",
-        "docs_unigram_logprob",
-        "docs_bigram_logprob",
-        "docs_bpe_merge_candidates",
-        "docs_token_stats",
-        "docs_language_id",
-        "docs_quality",
-        "docs_fingerprints",
-        "docs_tfidf_top_terms",
-        "emb_cosine_topk",
-        "emb_ivf_topk",
-        "emb_cosine_dup_pairs",
-        "emb_dup_clusters",
-        "emb_label_centroids",
-        "emb_norm_stats",
-        "emb_int8_quantize",
-        "emb_int8_topk",
-        "emb_int8_rerank_topk",
-        "emb_kmeans_assign",
-        "emb_semantic_dedup",
-        "docs_chunks",
-        "docs_pack_sequences",
-        "docs_length_percentiles",
-        "docs_vocab_coverage",
-        "docs_chunk_dups",
-        "docs_hashed_classifier",
-        "docs_ngram_diversity",
-        "docs_pareto_frontier",
-        "emb_rand_projection",
-        "emb_gram_matrix",
-        "docs_keyword_search",
-        "docs_canonical_best",
-        "docs_pagerank",
-        "docs_minhash_calibration",
-        "docs_bpe_train",
-        "docs_profile",
-        "docs_vocab_growth",
-        "docs_winnow_fingerprints",
-        "docs_winnow_matches",
-        "docs_repeated_spans",
-        "docs_quality_sweep",
-        "emb_pq_codes",
-        "emb_pq_topk",
-        "docs_token_budget",
-        "docs_incremental_dedup",
-        "docs_contamination_score",
-        "docs_source_dup_matrix",
-        "docs_length_weighted_sample",
-        "docs_span_coverage",
-        "docs_weighted_jaccard_pairs",
-        "docs_perplexity_buckets",
-        "docs_bpe_encode",
-        "emb_recall_audit",
-        "mm_image_features",
-        "mm_frame_sample",
-        "mm_payload_sniff",
-        "mm_wav_features",
-        "mm_bmp_features",
-        "mm_bmp_resize_features",
-        "mm_wav_decimate_features",
-        "docs_gopher_filter",
-        "emb_label_diversity",
-        "docs_tokenizer_fertility",
-        "emb_label_outliers",
-        "docs_curation_v2",
-        "docs_dedup_funnel",
-        "emb_ivf_int8_topk",
-        "docs_labelprop_communities",
-        "emb_mmr_topk",
-        "emb_cohort_drift",
-        "emb_matryoshka_recall",
-        "docs_bm25_topk",
-        "emb_knn_label_audit",
-        "mm_wav_frame_energy",
-        "docs_dup_graph_stats",
-        "docs_detector_agreement",
-        "emb_pq_distortion",
-        "mm_image_dup_stats",
-        "docs_temperature_mix",
-        "emb_ivf_balance",
-        "docs_zipf_slope",
-        "docs_jaccard_threshold_sweep",
-        "emb_hard_negatives",
-        "docs_dsir_weights",
-        "docs_span_scrub",
-        "emb_silhouette",
-        "docs_source_kl",
-        "emb_ivf_probe_sweep",
-        "docs_dsir_resample",
-        "docs_rrf_fusion",
-        "emb_cluster_coreset",
-        "docs_doremi_reweight",
-        "docs_pii_scan_v2",
-        "docs_vocab_novelty",
-        "docs_weighted_sample_aes",
-        "emb_kmeans_lloyd2",
-        "emb_dim_stats",
-        "docs_pmi_collocations",
-        "emb_power_iteration",
-        "docs_mixture_apportion",
-    ]):
-        if _i and _i % LLM_RELEASE_BLOCK == 0:
-            release_caches(f"llm_block_{_i}")
-            _load_corpus()
-            _prime_pairs()
-        fn = LQ.llm_queries()[name]
-        timed_repeat(name, lambda fn=fn: fn(spark, sf_dir).collect())
-
-    # Isolated dup-graph medians (round 11, VERDICT r10 item 4): three
-    # rounds of verdicts have re-adjudicated the same in-session
-    # scatter on the dup-graph items, whose in-block readings ride
-    # whatever cache state the ~115-item block accumulated by their
-    # list position. Re-establish the canonical warm context — fresh
-    # cache state, corpus tables + shared near-dup pairs frame primed
-    # untimed (both costs already paid and reported once above) — then
-    # 3-repeat each item. The `iso_*` medians in BENCH_DETAIL are the
-    # scatter-free reference numbers; they are DIAGNOSTIC_ITEMS
-    # (excluded from totals — the in-block line items already count
-    # this work once).
-    release_caches("before_iso_dupgraph")
-    _load_corpus()
-    _prime_pairs()
-    for _iso in (
-        "docs_pagerank",
-        "docs_labelprop_communities",
-        "docs_detector_agreement",
-    ):
-        _fn = LQ.llm_queries()[_iso]
-        timed_repeat(f"iso_{_iso}", lambda _fn=_fn: _fn(spark, sf_dir).collect())
-
-    release_caches("after_llm")
-
-    # --- clickstream analytics over the events table ----------------------
-    # Same warm-deployment model as load_corpus_tables (r12): every
-    # events query re-scans + re-repartitions the events table
-    # otherwise (~0.25-0.4 s per run at sf0.1, 3 runs per item).
-    # Persisting the read_table plan once lets the cache manager
-    # redirect every query's scan subtree; the load cost is paid and
-    # reported here as its own line item.
-    from iot_real_time_data_pipeline_spark import events_queries as EQ
-
-    timed(
-        "load_events_tables",
-        lambda: read_table(spark, sf_dir, "events").persist().count(),
-    )
-
-    for name, fn in EQ.events_queries().items():
-        timed_repeat(name, lambda fn=fn: fn(spark, sf_dir).collect())
-
-    release_caches("after_events")
-
-    # Cold canary (diagnostic — see DIAGNOSTIC_ITEMS): the same
-    # sessionize query re-run with the family caches RELEASED, so every
-    # repeat pays the parquet scan + repartition the warm in-family
-    # items read from cache. Keeps the warm-table accounting auditable.
-    _ev_cold = EQ.events_queries()["events_sessionize"]
-    timed_repeat(
-        "events_sessionize_cold_canary",
-        lambda: _ev_cold(spark, sf_dir).collect(),
-    )
-
-    # --- warehouse (TPC-H-shaped) analytics -------------------------------
-    from iot_real_time_data_pipeline_spark import warehouse_queries as WQ
-
-    def _load_wh():
-        for t in ("lineitem", "orders", "customer", "part", "supplier",
-                  "nation", "region"):
-            read_table(spark, sf_dir, t).persist().count()
-
-    timed("load_wh_tables", _load_wh)
-
-    for name, fn in WQ.warehouse_queries().items():
-        timed_repeat(name, lambda fn=fn: fn(spark, sf_dir).collect())
-
-    release_caches("after_wh")
-
-    # Cold canary for the wh family (diagnostic; see the events twin).
-    _wh_cold = WQ.warehouse_queries()["wh_q1_pricing_summary"]
-    timed_repeat(
-        "wh_q1_pricing_summary_cold_canary",
-        lambda: _wh_cold(spark, sf_dir).collect(),
-    )
+    # --- the query-registry families -------------------------------------
+    # Warm deployment model: each family's base tables are hot. Persisting
+    # the same scan plan the queries build lets Spark's cache manager
+    # redirect every query's scan to the shared InMemoryRelation; the load
+    # (and primer) cost is reported as its own line item. Every
+    # RELEASE_BLOCK items, and at the family's end, all caches are
+    # released: operator-internal persists otherwise pile up, and twice a
+    # tail query read 5-9x its isolated A/B (r7 mm_wav_decimate, r8
+    # docs_jaccard_threshold_sweep, both fine in a fresh JVM). Inside a
+    # family the base tables and primer are then re-warmed UNTIMED (their
+    # cost was reported once); related operators sit next to each other
+    # in the registry, so intra-block cache reuse survives.
+    for fam in FAMILIES:
+        timed(fam.load_item, load_tables, spark, sf_dir, fam.tables)
+        if fam.primer is not None:
+            timed(fam.primer.__name__, fam.primer, spark, sf_dir)
+        registry = fam.registry()
+        for i, (name, fn) in enumerate(registry.items()):
+            if i and i % RELEASE_BLOCK == 0:
+                release_caches(f"{fam.name}_block_{i}")
+                warm(spark, sf_dir, fam)
+            timed_repeat(name, lambda fn=fn: fn(spark, sf_dir).collect())
+        release_caches(f"after_{fam.name}")
+        if fam.cold_canary is not None:
+            fn = registry[fam.cold_canary]
+            timed_repeat(fam.cold_canary + COLD_CANARY,
+                         lambda fn=fn: fn(spark, sf_dir).collect())
 
     total = round(
         sum(v for k, v in times.items() if k not in DIAGNOSTIC_ITEMS), 3
@@ -626,11 +451,10 @@ def main() -> None:
     # So: print ONE COMPACT line — totals + per-family subtotals — and
     # write the complete per-query detail to a checked-in repo file.
     def _family(name: str) -> str:
-        if name.endswith("_cold_canary"):
+        if name.endswith(COLD_CANARY):
             return "cold_canary"  # diagnostic; keep out of events/wh
-        if name in ("derive_staging", "build_star", "load_corpus_tables",
-                    "derive_staging_warm", "load_events_tables",
-                    "load_wh_tables"):
+        if name in ("derive_staging", "build_star", "derive_staging_warm",
+                    *(fam.load_item for fam in FAMILIES)):
             return name
         if name[0] == "d" and name[1].isdigit():
             return "dashboard"
@@ -662,8 +486,7 @@ def main() -> None:
         "comparable_r2_subtotal": comparable_r2,
         "family_subtotals": fam_first,
         "family_median_subtotals": fam_median,
-        "cache_release_between_families": release_between_families,
-        "llm_release_block": LLM_RELEASE_BLOCK,
+        "release_block": RELEASE_BLOCK,
         "storage_bytes_at_release": storage_bytes_at_release,
         "storage_bytes_before": storage_bytes_before,
         "codecache_bytes_before": codecache_bytes_before,

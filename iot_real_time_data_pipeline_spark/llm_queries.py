@@ -361,15 +361,7 @@ def q_chunk_dups(spark, sf_dir):
 
 
 def llm_queries() -> dict[str, QueryFn]:
-    # mm_image_features leads the block: the driver records results in
-    # dict order, and CORRECTNESS_r03 shows its run stopped at the tail
-    # (50 rows recorded, the then-last entry missing) — keeping the
-    # mapInPandas query early guarantees it gets driver-side evidence
-    # even if a run is cut short.
     return {
-        "mm_image_features": q_multimodal_features,
-        "mm_frame_sample": q_frame_sample,
-        "mm_payload_sniff": q_payload_sniff,
         "docs_exact_dedup": q_exact_dedup,
         "docs_shingle_jaccard_pairs": q_shingle_jaccard,
         "docs_minhash_lsh_pairs": q_minhash_lsh,
@@ -389,20 +381,15 @@ def llm_queries() -> dict[str, QueryFn]:
         "docs_source_lang_matrix": q_source_lang_matrix,
         "docs_rebalanced_sample": q_rebalanced_sample,
         "docs_train_split": q_train_split,
-        "docs_chunks": q_chunks,
-        "docs_pack_sequences": q_pack_sequences,
-        "docs_length_percentiles": q_length_percentiles,
-        "docs_vocab_coverage": q_vocab_coverage,
-        "docs_chunk_dups": q_chunk_dups,
         "docs_repetition_stats": q_repetition_stats,
         "docs_char_entropy": q_char_entropy,
+        "docs_unigram_logprob": q_unigram_logprob,
+        "docs_bigram_logprob": q_bigram_logprob,
+        "docs_bpe_merge_candidates": q_bpe_merges,
         "docs_token_stats": q_token_stats,
         "docs_language_id": q_language_id,
         "docs_quality": q_quality,
         "docs_fingerprints": q_fingerprints,
-        "docs_unigram_logprob": q_unigram_logprob,
-        "docs_bigram_logprob": q_bigram_logprob,
-        "docs_bpe_merge_candidates": q_bpe_merges,
         "docs_tfidf_top_terms": q_tfidf,
         "emb_cosine_topk": q_cosine_topk,
         "emb_ivf_topk": q_ivf_topk,
@@ -411,20 +398,21 @@ def llm_queries() -> dict[str, QueryFn]:
         "emb_label_centroids": q_label_centroids,
         "emb_norm_stats": q_emb_norm_stats,
         "emb_int8_quantize": q_int8_quantize,
-        "emb_kmeans_assign": q_kmeans_assign,
         "emb_int8_topk": q_int8_topk,
         "emb_int8_rerank_topk": q_int8_rerank_topk,
-        "emb_ivf_int8_topk": q_ivf_int8_rerank_topk,
+        "emb_kmeans_assign": q_kmeans_assign,
         "emb_semantic_dedup": q_semantic_dedup,
-        # round-6+ additions (callables defined below — resolved at
-        # call time, after the module has fully loaded)
+        "docs_chunks": q_chunks,
+        "docs_pack_sequences": q_pack_sequences,
+        "docs_length_percentiles": q_length_percentiles,
+        "docs_vocab_coverage": q_vocab_coverage,
+        "docs_chunk_dups": q_chunk_dups,
         "docs_hashed_classifier": q_hashed_classifier,
         "docs_ngram_diversity": q_ngram_diversity,
         "docs_pareto_frontier": q_pareto_frontier,
         "emb_rand_projection": q_rand_projection,
         "emb_gram_matrix": q_gram_matrix,
         "docs_keyword_search": q_keyword_search,
-        "docs_bm25_topk": q_bm25_topk,
         "docs_canonical_best": q_canonical_best,
         "docs_pagerank": q_pagerank,
         "docs_minhash_calibration": q_minhash_calibration,
@@ -444,29 +432,34 @@ def llm_queries() -> dict[str, QueryFn]:
         "docs_length_weighted_sample": q_length_weighted_sample,
         "docs_span_coverage": q_span_coverage,
         "docs_weighted_jaccard_pairs": q_weighted_jaccard,
+        "docs_perplexity_buckets": q_perplexity_buckets,
+        "docs_bpe_encode": q_bpe_encode,
+        "emb_recall_audit": q_recall_audit,
+        "mm_image_features": q_multimodal_features,
+        "mm_frame_sample": q_frame_sample,
+        "mm_payload_sniff": q_payload_sniff,
         "mm_wav_features": q_wav_features,
         "mm_bmp_features": q_bmp_features,
-        "docs_perplexity_buckets": q_perplexity_buckets,
-        "emb_recall_audit": q_recall_audit,
         "mm_bmp_resize_features": q_bmp_resize_features,
-        "docs_bpe_encode": q_bpe_encode,
-        "docs_gopher_filter": q_gopher_filter,
         "mm_wav_decimate_features": q_wav_decimate_features,
-        "mm_wav_frame_energy": q_wav_frame_energy,
-        "mm_image_dup_stats": q_image_dup_stats,
+        "docs_gopher_filter": q_gopher_filter,
         "emb_label_diversity": q_label_diversity,
         "docs_tokenizer_fertility": q_tokenizer_fertility,
         "emb_label_outliers": q_label_outliers,
         "docs_curation_v2": q_curation_v2,
         "docs_dedup_funnel": q_dedup_funnel,
+        "emb_ivf_int8_topk": q_ivf_int8_rerank_topk,
         "docs_labelprop_communities": q_labelprop_communities,
         "emb_mmr_topk": q_mmr_topk,
         "emb_cohort_drift": q_cohort_drift,
         "emb_matryoshka_recall": q_matryoshka_recall,
+        "docs_bm25_topk": q_bm25_topk,
         "emb_knn_label_audit": q_knn_label_audit,
+        "mm_wav_frame_energy": q_wav_frame_energy,
         "docs_dup_graph_stats": q_dup_graph_stats,
         "docs_detector_agreement": q_detector_agreement,
         "emb_pq_distortion": q_pq_distortion,
+        "mm_image_dup_stats": q_image_dup_stats,
         "docs_temperature_mix": q_temperature_mix,
         "emb_ivf_balance": q_ivf_balance,
         "docs_zipf_slope": q_zipf_slope,

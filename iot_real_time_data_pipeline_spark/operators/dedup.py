@@ -78,11 +78,12 @@ def release_session_caches(spark) -> int:
     shingle postings, band frames, fingerprints) and return the storage
     bytes that were held at release time.
 
-    Call at natural session boundaries (between query families, after a
-    dedup campaign) — the policy that keeps caches alive for plan
-    sharing within a burst of related queries is wrong for a session
-    that moves on to unrelated work. The bench applies exactly this
-    hygiene between families (bench.py).
+    Call at natural session boundaries (after a burst of related
+    queries, after a dedup campaign) — the policy that keeps caches
+    alive for plan sharing within a burst of related queries is wrong
+    for a session that moves on to unrelated work. The bench's one
+    release rule (bench.py): every 25 items of a query family, after
+    which the family's base tables are re-warmed, and at its end.
     """
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     held = int(sum(i.memSize() for i in infos))

@@ -1531,7 +1531,7 @@ def semantic_dedup(
     # exchanges materialized concurrently under AQE and each re-ran the
     # k-means scoring pass (the r12 "a/b stampede", ~1 s of the 3.9 s
     # item). Persisting is lazy (construction stays action-free; the
-    # bench's family-boundary cache hygiene releases it). Partitioning
+    # caller releases it through dedup.release_session_caches). Partitioning
     # BY THE JOIN KEY before the persist makes the cached layout the
     # one the join needs, so BOTH exchanges disappear outright (guide
     # §2.4 "two operations keyed the same way share one exchange"):

@@ -32,6 +32,14 @@ either read path (TIMESTAMP_NTZ under the UTC session, or long nanos if
 a file stores TIMESTAMP(NANOS)); DuckDB mirrors with
 ``epoch_ns(col) // 1e9`` — both floor on the positive range, and the
 values are midnight-aligned anyway.
+
+Cache lifetime: a few operators persist an intermediate that the rest of
+their plan reads more than once (``bloom_prejoin_audit``,
+``join_size_audit``, ``market_basket``). The returned frame stays lazy
+and reads through those caches, so the operator cannot release them; the
+caller does, once it is done with the result, through
+:func:`dedup.release_session_caches`, as the dedup operators' persists
+are released.
 """
 
 from __future__ import annotations
@@ -1476,8 +1484,8 @@ def market_basket(lineitem: DataFrame, part: DataFrame) -> DataFrame:
         # (order, brand) frame (order count, per-brand counts, both
         # self-join sides); the lazy cache computes the lineitem⋈part
         # join + distinct once instead of per branch. Narrow rows
-        # (key + bounded brand), released by the bench's family-
-        # boundary cache hygiene.
+        # (key + bounded brand), released by the caller (see "Cache
+        # lifetime" above).
         .persist()
     )
     n_orders = ob.select("l_orderkey").distinct().agg(
@@ -1767,8 +1775,8 @@ def bloom_prejoin_audit(
     # scalar count; fact_keys feeds the probes and the row total. Un-
     # persisted, every branch re-ran its filter/distinct/groupBy
     # pipeline. All three frames are the audit's own bounded state
-    # (distinct keys / ≤m bits); released by the bench's family-
-    # boundary cache hygiene.
+    # (distinct keys / ≤m bits); released by the caller (see "Cache
+    # lifetime" above).
     keys = (
         orders.filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_orderkey").alias("key"))
@@ -2018,7 +2026,8 @@ def join_size_audit(
     """
     # Persists (round 13): fc feeds the fact stats AND the join-size
     # estimate; dc feeds the dim stats and the estimate — without the
-    # cache each branch re-ran its full-table groupBy.
+    # cache each branch re-ran its full-table groupBy. Released by the
+    # caller (see "Cache lifetime" above).
     fc = fact.groupBy(F.col(fact_key).alias("k")).agg(
         F.count("*").alias("cf")
     ).persist()

@@ -142,6 +142,7 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
         # regions, and status-only consumers prune the array assembly).
         flagged = process_events(batch_df, assemble=False).persist()
         processed = attach_validation_arrays(with_alerts(flagged))
+        lake = alerts = None
         try:
             routed = route(processed)
 
@@ -211,7 +212,6 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             if jsonl_mirror:  # S4 — debug JSONL mirror of the stream
                 flat.write.mode("append").json(f"{warehouse_dir}/lake_jsonl")
             _append_parquet(alerts, alerts_dir)
-            alerts.unpersist()
             # S6 — dead letters, partitioned by error class like the
             # reference's errors/json_decode/ vs errors/processing/
             # prefixes (lamda.py:488-530).
@@ -224,13 +224,15 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             offsets = append_star(
                 to_staging(_one_partition_hint(lake)), star_dir, existing, offsets
             )
-            lake.unpersist()
         except BaseException:
             # A failed batch may have stored keys it never reported.
             offsets = None
             raise
         finally:
-            flagged.unpersist()
+            # A batch that raises releases its caches too.
+            for cached in (alerts, lake, flagged):
+                if cached is not None:
+                    cached.unpersist()
 
     return _load
 

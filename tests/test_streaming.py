@@ -537,7 +537,8 @@ def test_failed_batch_drops_carried_offsets(spark, tmp_path, monkeypatch):
     re-run appends no soil row (they are stored), so the carried soil
     offset would stay below the stored max; the loader drops the carried
     offsets when a batch raises, and the next batch's soil keys lie
-    above the stored ones. The re-run loads the fact exactly once."""
+    above the stored ones. The re-run loads the fact exactly once, and
+    the raised batch leaves no cached frame behind."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from iot_real_time_data_pipeline_spark.streaming import foreach_batch_loader
@@ -556,9 +557,14 @@ def test_failed_batch_drops_carried_offsets(spark, tmp_path, monkeypatch):
             failures.append(path)
             raise RuntimeError("driver lost after the dim_soil commit")
 
+    def persistent_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
     monkeypatch.setattr(DataFrameWriter, "parquet", commit_then_raise)
+    cached = persistent_rdds()
     with pytest.raises(RuntimeError, match="dim_soil commit"):
         load(batches[1], 1)
+    assert persistent_rdds() == cached
     before = _stored_keys(spark, wh)
     load(batches[1], 1)
     load(batches[2], 2)

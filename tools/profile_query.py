@@ -1,8 +1,8 @@
 """Per-query job/stage profiler (round 12 optimization measurement).
 
 Runs one or more registered queries in a fresh JVM with the bench's
-canonical warm context (corpus tables persisted, near-dup pairs primed,
-both untimed), then prints for each query:
+warm context for their families (``bench.FAMILIES``: base tables
+persisted, primer run, both untimed), then prints for each query:
 
 - wall seconds for the collect (3 repeats: first + median),
 - the Spark JOB breakdown of the FIRST run (job id, duration ms,
@@ -10,9 +10,10 @@ both untimed), then prints for each query:
   AppStatusStore, so the expensive stage inside a multi-job query
   (iterative operators, per-round actions) is visible without the UI.
 
-Usage::
+This gives the isolated numbers for any bench item, e.g. the dup-graph
+stack without the rest of its release block::
 
-    python tools/profile_query.py docs_labelprop_communities docs_pagerank
+    python tools/profile_query.py docs_pagerank docs_labelprop_communities docs_detector_agreement
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 (default)
 """
 
@@ -34,20 +35,20 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from bench import suite_session
+    from bench import FAMILIES, suite_session, warm
+
+    qdict = {}
+    families = []
+    for fam in FAMILIES:
+        registry = fam.registry()
+        qdict.update(registry)
+        if any(name in registry for name in names):
+            families.append(fam)
 
     spark = suite_session("profile", cpus)
     spark.sparkContext.setLogLevel("ERROR")
-
-    from iot_real_time_data_pipeline_spark import llm_queries as LQ
-    from iot_real_time_data_pipeline_spark.entrypoints import read_table
-    from iot_real_time_data_pipeline_spark.operators import dedup as DD
-
-    for t in ("documents", "embeddings"):
-        read_table(spark, sf_dir, t).persist().count()
-    DD.minhash_lsh_pairs(
-        read_table(spark, sf_dir, "documents"), threshold=LQ.JACCARD_THRESHOLD
-    ).persist().count()
+    for fam in families:
+        warm(spark, sf_dir, fam)
 
     store = spark.sparkContext._jsc.sc().statusStore()
 
@@ -59,16 +60,6 @@ def main() -> None:
             out[j.jobId()] = j
         return out
 
-    # Round 13: cover the events/warehouse registries too (their items
-    # read the same warm base tables the bench persists above).
-    from iot_real_time_data_pipeline_spark import events_queries as EQ
-    from iot_real_time_data_pipeline_spark import warehouse_queries as WQ
-
-    for t in ("events", "lineitem", "orders", "customer", "part",
-              "supplier", "nation", "region"):
-        read_table(spark, sf_dir, t).persist().count()
-    qdict = {**LQ.llm_queries(), **EQ.events_queries(),
-             **WQ.warehouse_queries()}
     for name in names:
         fn = qdict[name]
         before = set(jobs_snapshot())
