@@ -309,18 +309,14 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         from iot_real_time_data_pipeline_spark.entrypoints import iot_raw_events
-        from iot_real_time_data_pipeline_spark.functions.alerts import with_alerts
-        from iot_real_time_data_pipeline_spark.functions.validation import (
-            attach_validation_arrays,
-        )
         from iot_real_time_data_pipeline_spark.operators.pipeline import (
+            assemble_events,
             process_events,
             to_staging,
         )
 
         raw = iot_raw_events(spark, sf_dir).filter(F.lit(True))
-        flagged = process_events(raw, assemble=False)
-        to_staging(attach_validation_arrays(with_alerts(flagged))).count()
+        to_staging(assemble_events(process_events(raw))).count()
 
     timed("derive_staging_warm", _derive_warm)
     DIAGNOSTIC_ITEMS = {"derive_staging_warm"} | {

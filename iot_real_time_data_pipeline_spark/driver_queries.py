@@ -29,7 +29,13 @@ from pyspark.sql import functions as F
 from . import oracle_iot as O
 from .entrypoints import iot_processed, iot_staging, iot_star
 from .operators import dashboard as D
-from .operators.pipeline import exploded_alerts, route
+from .operators.pipeline import (
+    LAKE_PARTITION_BY,
+    exploded_alerts,
+    lake_partitions,
+    route,
+    staging_projection,
+)
 from .functions.alerts import recommended_action
 from .functions import texthash as TH
 from .streaming.throttle import ALERT_INTERVAL_SECONDS as _ALERT_INTERVAL
@@ -74,7 +80,9 @@ def _lake_dir(sf_dir: str) -> str:
     """Cache-dir path for the materialized lake, keyed on a CONTENT
     fingerprint (path + mtime + size of every source parquet file), not
     just the sf_dir path — regenerated source data under the same path
-    gets a fresh cache dir instead of silently serving stale rows."""
+    gets a fresh cache dir instead of silently serving stale rows. The
+    partition layout (``LAKE_PARTITION_BY``) is part of the key, so a
+    lake written under another layout is never read back."""
     import hashlib
     import tempfile
 
@@ -89,7 +97,7 @@ def _lake_dir(sf_dir: str) -> str:
             ]
     elif os.path.exists(src):
         paths = [src]
-    h = hashlib.sha256()
+    h = hashlib.sha256("/".join(LAKE_PARTITION_BY).encode())
     for p in sorted(paths):
         st = os.stat(p)
         h.update(f"{p}|{st.st_mtime_ns}|{st.st_size}\n".encode())
@@ -103,8 +111,8 @@ def _lake_dir(sf_dir: str) -> str:
 def q_staging_from_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 round-trip — the lake -> staging path through an ACTUAL
     partitioned Parquet lake, not the in-memory frame: write the routed
-    lake once per (sf, tmpdir) with ``partitionBy(validation_status,
-    loc_part, date)`` (SURVEY §4's prunable layout — the reference's S3
+    lake once per (sf, tmpdir) partitioned by ``LAKE_PARTITION_BY``
+    (SURVEY §4's prunable layout — the reference's S3
     lake, lamda.py:365-367, comments the date path out and can never
     prune), then read it back under a status+loc+date slice and emit
     the staging contract.
@@ -115,17 +123,12 @@ def q_staging_from_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     locations' two weeks and reading the lake.
     ``test_staging_from_lake_scan_is_partition_pruned`` pins that plan.
     """
-    from .operators.pipeline import staging_projection
-
     lake_dir = _lake_dir(sf_dir)
     if not os.path.exists(os.path.join(lake_dir, "_SUCCESS")):
         lake = route(iot_processed(spark, sf_dir))["lake"]
         typed = lake.select(
             *staging_projection(),
-            F.coalesce(F.col("loc_id"), F.lit("unknown")).alias("loc_part"),
-            F.coalesce(
-                F.to_date(F.col("event_ts")), F.lit("1970-01-01").cast("date")
-            ).alias("date"),
+            *[c.alias(name) for name, c in lake_partitions().items()],
         )
         # Build in a unique scratch dir, publish with one atomic rename:
         # two concurrent sessions can both pass the _SUCCESS guard, but
@@ -138,7 +141,7 @@ def q_staging_from_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_dir = os.path.join(scratch, "lake")
         (
             typed.write.mode("overwrite")
-            .partitionBy("validation_status", "loc_part", "date")
+            .partitionBy(*LAKE_PARTITION_BY)
             .parquet(build_dir)
         )
         try:
@@ -157,12 +160,12 @@ def q_staging_from_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lake_schema = StructType(
         [StructField(n, t) for n, t in STAGING_COLUMNS]
-        + [StructField("loc_part", StringType()), StructField("date", DateType())]
+        + [StructField("loc_id_part", StringType()), StructField("date", DateType())]
     )
     scan = spark.read.schema(lake_schema).parquet(lake_dir)
     pruned = scan.filter(
         F.col("validation_status").isin("VALID", "WARNING")
-        & F.col("loc_part").isin(*LAKE_SLICE_LOCS)
+        & F.col("loc_id_part").isin(*LAKE_SLICE_LOCS)
         & (F.col("date") >= F.lit(LAKE_SLICE_DATE_FROM).cast("date"))
         & (F.col("date") < F.lit(LAKE_SLICE_DATE_TO).cast("date"))
     )

@@ -26,8 +26,6 @@ so values are bit-identical and the unusual double-equality dim joins
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,26 +40,20 @@ from pyspark.sql import types as T
 # session cannot turn it off after the fact — pre-seed the cache at
 # engine import. Purely diagnostic (error call-site decoration only);
 # sessions built by session.build_session also set the conf properly.
-# Guards (ADVICE r12): only poke when the attribute exists AND is still
+# Guard (ADVICE r12): only poke when the attribute exists AND is still
 # unresolved (None) — a PySpark that renamed or already resolved it is
-# left alone — and honor an env escape hatch so call-site debugging can
-# be re-enabled without editing the module.
+# left alone.
 try:  # tolerate future PySpark versions removing the cache attribute
     from pyspark.errors import utils as _pyspark_err_utils
 
-    if (
-        getattr(_pyspark_err_utils, "_enable_debugging_cache", "absent") is None
-        and os.environ.get("SPARK_GRAFT_KEEP_DF_DEBUGGING") != "1"
-    ):
+    if getattr(_pyspark_err_utils, "_enable_debugging_cache", "absent") is None:
         _pyspark_err_utils._enable_debugging_cache = False
 except Exception:  # pragma: no cover
     pass
 
-from .functions.alerts import with_alerts
-from .functions.validation import attach_validation_arrays
-from .operators.pipeline import process_events, to_staging
+from .operators.pipeline import assemble_events, process_events, to_staging
 from .operators.star_schema import build_star
-from .schemas import SENSOR_NAMES, WEATHER_FIELDS
+from .schemas import RAW_JSON_COL, SENSOR_NAMES, WEATHER_FIELDS
 from .session import apply_read_confs
 
 # (sensor -> (scale, offset, span)): val = offset + (value * scale) % span
@@ -224,7 +216,7 @@ def iot_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     longitude = F.lit(28.0) + base * 1.25
 
     raw = ev.select(
-        F.lit(None).cast("string").alias("raw_json"),
+        F.lit(None).cast("string").alias(RAW_JSON_COL),
         F.concat(F.lit("evt_"), F.col("event_id").cast("string")).alias("event_id"),
         F.date_format(F.col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").alias("timestamp"),
         loc_id.alias("loc_id"),
@@ -252,8 +244,8 @@ def iot_processed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumers (staging, dashboards) prune them entirely, sink-shaped
     # consumers rebuild them from cached booleans, and the cache
     # boundary keeps each codegen region under janino's 64 KB limit.
-    flagged = process_events(iot_raw_events(spark, sf_dir), assemble=False).persist()
-    return attach_validation_arrays(with_alerts(flagged))
+    flagged = process_events(iot_raw_events(spark, sf_dir)).persist()
+    return assemble_events(flagged)
 
 
 def iot_staging(spark: SparkSession, sf_dir: str) -> DataFrame:

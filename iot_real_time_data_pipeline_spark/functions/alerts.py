@@ -62,7 +62,6 @@ def _nutrient_min(loc: Column, nutrient: str) -> Column:
 
 def alerts_column(
     status: Column,
-    errors: Column,
     loc: Column,
     temperature: Column,
     water_level: Column,
@@ -70,44 +69,34 @@ def alerts_column(
     nitrogen: Column,
     phosphorus: Column,
     potassium: Column,
-    error_class_flags: dict[str, Column] | None = None,
 ) -> Column:
     """``array<struct<type,priority,description>>`` of fired alerts.
 
     Numeric inputs must be the validated-cast doubles
-    (``validation.validation_columns``'s ``sensor_<name>`` outputs) so
+    (``validation.validate_flags``'s ``sensor_<name>`` outputs) so
     the "is numeric" guards of the reference hold (null => rule skipped).
 
-    ``error_class_flags`` maps ``extreme_value`` / ``missing`` /
-    ``out_of_range`` to precomputed booleans (``validate_events``'s
-    ``_errcls_*``). When given, R1 uses them instead of scanning the
-    error array with ``exists()`` — a lambda HOF that evaluates
-    interpreted per row *and* forces the array to materialize, defeating
-    column pruning for consumers that never project it.
+    R1 reads the ``_errcls_*`` booleans ``validate_flags`` computes per
+    error class, rather than scanning the error array with ``exists()``
+    — a lambda HOF that evaluates interpreted per row *and* forces the
+    array to materialize, defeating column pruning for consumers that
+    never project it.
     """
     invalid = status == "INVALID"
     operational = status.isin("VALID", "WARNING")
 
-    def has_sensor_error(fragment: str) -> Column:
-        if error_class_flags is not None:
-            return error_class_flags[fragment]
-        return F.exists(
-            errors,
-            lambda e: e.startswith("sensor_data") & e.contains(fragment),
-        )
-
     # R1 — one CRITICAL alert per error class present (lamda.py:163-182).
     critical = [
         _alert(
-            invalid & has_sensor_error(fragment),
+            invalid & F.col(flag),
             "Sensor Failure",
             "CRITICAL",
             F.concat(F.lit("Critical sensor issue detected at "), loc, F.lit(f": {cls}")),
         )
-        for fragment, cls in [
-            ("extreme_value", "sensor_failure"),
-            ("missing", "sensor_disconnected"),
-            ("out_of_range", "sensor_malfunction"),
+        for flag, cls in [
+            ("_errcls_extreme", "sensor_failure"),
+            ("_errcls_missing", "sensor_disconnected"),
+            ("_errcls_oor", "sensor_malfunction"),
         ]
     ]
 
@@ -171,23 +160,12 @@ def alerts_column(
 
 
 def with_alerts(df: DataFrame) -> DataFrame:
-    """Append the ``alerts`` column to a validated-event DataFrame.
-
-    Consumes (and drops) the ``_errcls_*`` flag columns when
-    ``validate_events(..., error_class_cols=True)`` produced them.
-    """
-    flags = None
-    if "_errcls_extreme" in df.columns:
-        flags = {
-            "extreme_value": F.col("_errcls_extreme"),
-            "missing": F.col("_errcls_missing"),
-            "out_of_range": F.col("_errcls_oor"),
-        }
+    """Append the ``alerts`` column to ``validate_flags``'s frame,
+    consuming (and dropping) its ``_errcls_*`` flag columns."""
     out = df.withColumn(
         "alerts",
         alerts_column(
             status=F.col("validation_status"),
-            errors=F.col("validation_errors"),
             loc=F.col("loc_id"),
             temperature=F.col("sensor_temperature"),
             water_level=F.col("sensor_water_level"),
@@ -195,7 +173,6 @@ def with_alerts(df: DataFrame) -> DataFrame:
             nitrogen=F.col("sensor_nitrogen"),
             phosphorus=F.col("sensor_phosphorus"),
             potassium=F.col("sensor_potassium"),
-            error_class_flags=flags,
         ),
     )
     return out.drop("_errcls_extreme", "_errcls_missing", "_errcls_oor")

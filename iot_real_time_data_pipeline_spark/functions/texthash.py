@@ -94,7 +94,8 @@ def shingles(toks: Column, n: int = 3) -> Column:
 
 
 def shingle_hashes_from(th: Column, n: int = 3) -> Column:
-    """Distinct shingle hashes from a *materialized* token-hash array.
+    """Distinct shingle hashes (the MinHash input set) from a
+    *materialized* token-hash array.
 
     CRITICAL: ``th`` must be a plain column reference (a stored
     array<long>), NOT a live ``transform(...)`` expression — each
@@ -115,16 +116,6 @@ def shingle_hashes_from(th: Column, n: int = 3) -> Column:
         return acc
 
     return F.array_distinct(F.transform(idx, combine))
-
-
-def shingle_hashes(toks: Column, n: int = 3) -> Column:
-    """Distinct shingle hashes of a document (the MinHash input set).
-
-    Convenience composition for small inputs/tests; hot paths should
-    stage ``token_hashes`` into a column and call ``shingle_hashes_from``
-    (see that function's warning).
-    """
-    return shingle_hashes_from(token_hashes(toks), n)
 
 
 def minhash_signature(hash_set: Column) -> list[Column]:
@@ -171,7 +162,7 @@ def sql_shingles(toks_col: str, n: int = 3) -> str:
 
 
 def sql_shingle_hashes(token_hashes_col: str, n: int = 3) -> str:
-    """Mirror of ``shingle_hashes``: combine per-token hashes over an
+    """Mirror of ``shingle_hashes_from``: combine per-token hashes over an
     existing ``array<bigint>`` column (hash each char exactly once)."""
     acc = f"coalesce({token_hashes_col}[i], 0)"
     for j in range(1, n):

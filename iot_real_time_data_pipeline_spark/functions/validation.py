@@ -24,9 +24,10 @@ exactly, including its quirks:
   errors (plus accumulated required-key errors for the latter).
 
 Input contract: a DataFrame with ``schemas.raw_event_schema()``
-columns; optionally a ``raw_json`` string column holding the original
-event JSON, used to distinguish quoted from numeric sensor values
-(without it, every value is assumed to have been numeric JSON).
+columns plus the ``raw_json`` string column (``schemas.RAW_JSON_COL``)
+holding the original event JSON, used to tell key absence from JSON
+null and quoted from numeric sensor values. A null payload (events
+synthesized in-plan rather than parsed) reads as "no key, not quoted".
 
 Physical shape: two phases. ``validate_flags`` evaluates the rules in
 *layers* of ``withColumns`` — raw probes / quoted flags, casts and
@@ -34,7 +35,8 @@ bounds, per-sensor predicate flags, then status/dead-letter folded
 directly from the booleans. ``attach_validation_arrays`` turns the
 flags into the ``validation_errors``/``validation_warnings`` string
 arrays. The split lets deployments ``persist()`` the cheap all-boolean
-frame and assemble arrays only at sinks that emit them; because status
+frame and assemble arrays only at sinks that emit them
+(``operators.pipeline.process_events`` / ``assemble_events``); because status
 never references the arrays, status-only consumers prune the assembly
 from the plan entirely. Everything is codegen-friendly (no lambda
 higher-order functions — see ``_conditional_array``), each non-cheap
@@ -53,6 +55,7 @@ from ..schemas import (
     EXTREME_NUMERIC_SENTINELS,
     EXTREME_STRING_SENTINELS,
     KNOWN_LOC_IDS,
+    RAW_JSON_COL,
     SENSOR_NAMES,
 )
 
@@ -83,7 +86,7 @@ def range_max(loc: Column, sensor: str) -> Column:
     return _per_location(loc, sensor, 1)
 
 
-def _top_level_keys(raw_json: Column) -> Column:
+def _top_level_keys() -> Column:
     """Top-level key set of the raw payload, as a map<string,string>.
 
     ``from_json`` with a map schema keeps exactly the depth-1 keys
@@ -96,35 +99,31 @@ def _top_level_keys(raw_json: Column) -> Column:
     subexpression elimination shares it across the per-key probes in
     the same projection.
     """
-    return F.from_json(raw_json, "map<string,string>")
+    return F.from_json(F.col(RAW_JSON_COL), "map<string,string>")
 
 
-def _key_present(raw_json: Column | None, col: Column, key: str) -> Column:
+def _key_present(col: Column, key: str) -> Column:
     """Reference semantics: required-key errors fire on key *absence*
     (``key not in data``, lamda.py:84), not on explicit JSON null —
-    detected from the raw payload's top-level key set; for synthesized
-    (non-JSON) plans a non-null column implies presence.
+    detected from the raw payload's top-level key set; a non-null
+    column implies presence (for a null payload, the only evidence).
     """
-    if raw_json is None:
-        return col.isNotNull()
     return (
-        F.coalesce(F.map_contains_key(_top_level_keys(raw_json), key), F.lit(False))
+        F.coalesce(F.map_contains_key(_top_level_keys(), key), F.lit(False))
         | col.isNotNull()
     )
 
 
-def _was_quoted(raw_json: Column | None, sensor: str) -> Column:
+def _was_quoted(sensor: str) -> Column:
     """True when the sensor value appeared as a quoted JSON string.
 
     Lexical check on the raw payload — the only place the
     string-vs-number distinction survives once values are ingested as
     map<string,string>.
     """
-    if raw_json is None:
-        return F.lit(False)
     # coalesce: a null raw payload (e.g. events synthesized in-plan
     # rather than parsed from JSON text) means "not quoted".
-    return F.coalesce(raw_json.rlike(f'"{sensor}"\\s*:\\s*"'), F.lit(False))
+    return F.coalesce(F.col(RAW_JSON_COL).rlike(f'"{sensor}"\\s*:\\s*"'), F.lit(False))
 
 
 def _conditional_array(pairs: list[tuple[Column, Column]], elem_ddl: str = "string") -> Column:
@@ -148,11 +147,7 @@ def _any(flags: list[Column]) -> Column:
     return out
 
 
-def validate_flags(
-    df: DataFrame,
-    raw_json_col: str | None = None,
-    error_class_cols: bool = False,
-) -> DataFrame:
+def validate_flags(df: DataFrame) -> DataFrame:
     """Rule evaluation WITHOUT the string-array assembly.
 
     Appends ``validation_status`` / ``dead_letter`` / ``sensor_<name>``
@@ -171,13 +166,10 @@ def validate_flags(
     scan→flags→arrays→sink plan exceeds janino's 64 KB method limit
     and would silently fall back to interpreted evaluation).
 
-    With ``error_class_cols=True``, three ``_errcls_*`` booleans (did
-    any sensor fire extreme / missing / out-of-range) are added for the
-    alert engine's R1 class checks (lamda.py:163-182), replacing an
-    interpreted ``exists()`` scan over the error array; the caller is
-    expected to drop them (``with_alerts`` does).
+    Three ``_errcls_*`` booleans (did any sensor fire extreme / missing
+    / out-of-range) carry the alert engine's R1 class checks
+    (lamda.py:163-182); ``with_alerts`` reads and drops them.
     """
-    raw_json = F.col(raw_json_col) if raw_json_col else None
     loc = F.col("loc_id")
     sensors = F.col("sensor_data")
     weather = F.col("weather_data")
@@ -193,9 +185,9 @@ def validate_flags(
     l1: dict[str, Column] = {}
     for s in SENSOR_NAMES:
         l1[f"_raw_{s}"] = sensors.getItem(s)
-        l1[f"_q_{s}"] = _was_quoted(raw_json, s)
+        l1[f"_q_{s}"] = _was_quoted(s)
     for k in REQUIRED_TOP_LEVEL_KEYS:
-        l1[f"_key_{k}"] = _key_present(raw_json, key_cols[k], k)
+        l1[f"_key_{k}"] = _key_present(key_cols[k], k)
     l1["_loc_missing"] = loc.isNull() | (loc == "")
     l1["_sensors_empty"] = sensors.isNull() | (F.size(F.map_keys(sensors)) == 0)
     l1["_has_temp_key"] = F.coalesce(F.map_contains_key(sensors, "temperature"), F.lit(False))
@@ -290,14 +282,13 @@ def validate_flags(
             .otherwise(F.lit("VALID"))
         ),
     }
-    if error_class_cols:
-        # R1's `exists(errors, e -> startswith('sensor_data') & contains(cls))`
-        # as plain booleans. "missing" never matches: per-sensor missing
-        # classifies as extreme_value (None is a sentinel, lamda.py:97),
-        # and no other sensor_data:* error string contains "missing".
-        l4["_errcls_extreme"] = eligible & _any([F.col(f"_ext_{s}") for s in SENSOR_NAMES])
-        l4["_errcls_missing"] = F.lit(False)
-        l4["_errcls_oor"] = eligible & _any([F.col(f"_oor_{s}") for s in SENSOR_NAMES])
+    # R1's "any sensor_data:* error of this class" as plain booleans.
+    # "missing" never matches: per-sensor missing classifies as
+    # extreme_value (None is a sentinel, lamda.py:97), and no other
+    # sensor_data:* error string contains "missing".
+    l4["_errcls_extreme"] = eligible & _any([F.col(f"_ext_{s}") for s in SENSOR_NAMES])
+    l4["_errcls_missing"] = F.lit(False)
+    l4["_errcls_oor"] = eligible & _any([F.col(f"_oor_{s}") for s in SENSOR_NAMES])
     for s in SENSOR_NAMES:
         # Validated double — null for sentinel / unconvertible values.
         l4[f"sensor_{s}"] = F.when(
@@ -319,8 +310,9 @@ def validate_flags(
 
 def attach_validation_arrays(df: DataFrame) -> DataFrame:
     """Fold the ``_*`` rule flags into the ``validation_errors`` /
-    ``validation_warnings`` string arrays, then drop the flags
-    (``_errcls_*`` excepted — ``with_alerts`` owns those).
+    ``validation_warnings`` string arrays, then drop the flags. Runs
+    after ``with_alerts``, which consumes the ``_errcls_*`` flags
+    (``operators.pipeline.assemble_events`` owns that order).
 
     Pure function of ``validate_flags``'s output; membership and order
     match the reference's append order exactly (lamda.py:60-150). The
@@ -375,27 +367,4 @@ def attach_validation_arrays(df: DataFrame) -> DataFrame:
         )
     )
     df = df.withColumns({"validation_errors": errors, "validation_warnings": warnings})
-    keep = {"_errcls_extreme", "_errcls_missing", "_errcls_oor"}
-    return df.drop(*[c for c in df.columns if c.startswith("_") and c not in keep])
-
-
-def validate_events(
-    df: DataFrame,
-    raw_json_col: str | None = None,
-    error_class_cols: bool = False,
-) -> DataFrame:
-    """Append validation outcome columns to a raw-event DataFrame.
-
-    Adds ``validation_status`` / ``validation_errors`` /
-    ``validation_warnings`` / ``dead_letter`` plus one ``sensor_<name>``
-    double column per sensor (the validated-cast value — the
-    reference's in-place conversion, lamda.py:109-117).
-
-    One-shot composition of ``validate_flags`` +
-    ``attach_validation_arrays``; long-lived deployments that want the
-    cache boundary between the two phases call them separately (see
-    ``entrypoints.iot_processed``).
-    """
-    return attach_validation_arrays(
-        validate_flags(df, raw_json_col=raw_json_col, error_class_cols=error_class_cols)
-    )
+    return df.drop(*[c for c in df.columns if c.startswith("_")])

@@ -192,10 +192,3 @@ def generate_events(
             raw = json.dumps(record)
         out.append({"raw": raw, "expected_class": expected, "scenario": scenario})
     return out
-
-
-def write_jsonl(events: list[dict], path: str) -> None:
-    """Write raw payloads one-per-line (the stream wire format)."""
-    with open(path, "w") as fh:
-        for e in events:
-            fh.write(e["raw"].replace("\n", " ") + "\n")

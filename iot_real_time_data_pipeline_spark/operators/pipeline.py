@@ -8,6 +8,14 @@ followed by partition-valued routing. The three S3 prefixes
 the dead-letter prefixes (lamda.py:488-530) become *partition values*,
 so at 100 TB the "routing" is free: it's just which partition a row
 lands in, and downstream readers get static partition pruning.
+
+This module is the only one that knows how a parsed payload becomes
+the processed frame, in two steps with a cache boundary between them:
+``process_events`` builds the boolean flag frame every caller
+persists, and ``assemble_events`` derives the alerts and the
+error/warning arrays above it (see ``validation.validate_flags`` for
+why the split pays). ``LAKE_PARTITION_BY`` / ``lake_partitions`` fix
+the one partition layout of every lake writer.
 """
 
 from __future__ import annotations
@@ -16,12 +24,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.alerts import with_alerts
-from ..functions.validation import attach_validation_arrays, validate_flags
-from ..schemas import SENSOR_NAMES, STAGING_COLUMNS
-from ..sources.events import RAW_JSON_COL
+from ..functions.validation import _was_quoted, attach_validation_arrays, validate_flags
+from ..schemas import RAW_JSON_COL, SENSOR_NAMES, STAGING_COLUMNS
 
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
 PROCESSOR_VERSION = "1.0"
+
+# Lake layout (S5): the routing status, then location and event date —
+# SURVEY §4's fix for the reference's unprunable S3 layout
+# (lamda.py:365-367 comments the date path out), so every
+# location- or time-bounded read prunes statically.
+LAKE_PARTITION_BY = ["validation_status", "loc_id_part", "date"]
 
 
 def event_time(col: Column) -> Column:
@@ -33,27 +46,38 @@ def event_time(col: Column) -> Column:
     )
 
 
-def process_events(
-    parsed: DataFrame, clock: Column | None = None, assemble: bool = True
-) -> DataFrame:
-    """Validate + alert a parsed raw-event DataFrame (one map stage).
+def process_events(parsed: DataFrame) -> DataFrame:
+    """Validate a parsed raw-event DataFrame into the flag frame (one
+    map stage): boolean rule flags, ``validation_status``,
+    ``dead_letter``, the validated ``sensor_<name>`` doubles,
+    ``validation_timestamp`` (the reference's ``datetime.utcnow()``,
+    lamda.py:441) and the parsed ``event_ts``.
 
-    ``clock`` stands in for the reference's ``datetime.utcnow()``
-    (lamda.py:441) — injectable so tests and oracles are deterministic.
-
-    ``assemble=False`` returns the flag-level frame (boolean rule flags
-    instead of the error/warning string arrays) for callers that want
-    to ``persist()`` it and attach the arrays lazily above the cache —
-    see ``validation.validate_flags`` for why. Finish with
-    ``attach_validation_arrays(with_alerts(flagged))``.
+    Callers ``persist()`` this frame and finish with
+    ``assemble_events`` above the cache.
     """
-    clock = clock if clock is not None else F.current_timestamp()
-    flagged = validate_flags(parsed, raw_json_col=RAW_JSON_COL, error_class_cols=True)
-    flagged = flagged.withColumn("validation_timestamp", clock)
-    flagged = flagged.withColumn("event_ts", event_time(F.col("timestamp")))
-    if not assemble:
-        return flagged
+    flagged = validate_flags(parsed)
+    flagged = flagged.withColumn("validation_timestamp", F.current_timestamp())
+    return flagged.withColumn("event_ts", event_time(F.col("timestamp")))
+
+
+def assemble_events(flagged: DataFrame) -> DataFrame:
+    """Flag frame -> processed frame: the ``alerts`` array, then the
+    ``validation_errors`` / ``validation_warnings`` arrays. Alerts go
+    first because they consume the ``_errcls_*`` flags, and the array
+    step drops every remaining ``_*`` flag."""
     return attach_validation_arrays(with_alerts(flagged))
+
+
+def lake_partitions() -> dict[str, Column]:
+    """The lake partition columns below ``validation_status``, by name
+    (``LAKE_PARTITION_BY``), from a processed frame: a null location
+    lands under ``unknown`` and an unparseable timestamp under
+    1970-01-01, so every row has a partition."""
+    return {
+        "loc_id_part": F.coalesce(F.col("loc_id"), F.lit("unknown")),
+        "date": F.coalesce(F.to_date(F.col("event_ts")), F.lit("1970-01-01").cast("date")),
+    }
 
 
 def route(processed: DataFrame) -> dict[str, DataFrame]:
@@ -165,7 +189,8 @@ def to_staging(processed: DataFrame) -> DataFrame:
 
 
 def flat_lake_row(processed: DataFrame) -> DataFrame:
-    """Flattened lake projection (lamda.py:333-348 + :361-362 metadata).
+    """Flattened lake projection (lamda.py:333-348 + :361-362 metadata),
+    followed by the ``lake_partitions`` columns.
 
     Arrays (validation_errors/warnings, alerts) are JSON-stringified
     exactly as ``flatten_record`` does for lists. Sensor values are the
@@ -182,11 +207,9 @@ def flat_lake_row(processed: DataFrame) -> DataFrame:
         F.col("location.latitude").alias("location_latitude"),
         F.col("location.longitude").alias("location_longitude"),
     ]
-    from ..functions.validation import _was_quoted
-
     sel += [
         F.when(
-            _was_quoted(F.col(RAW_JSON_COL), s) & F.col(f"sensor_{s}").isNotNull(),
+            _was_quoted(s) & F.col(f"sensor_{s}").isNotNull(),
             F.col(f"sensor_{s}").cast("string"),
         )
         .otherwise(F.col("sensor_data").getItem(s))
@@ -217,6 +240,7 @@ def flat_lake_row(processed: DataFrame) -> DataFrame:
         F.current_timestamp().alias("processing_timestamp"),
         F.lit(PROCESSOR_VERSION).alias("processor_version"),
     ]
+    sel += [c.alias(name) for name, c in lake_partitions().items()]
     return base.select(*sel)
 
 

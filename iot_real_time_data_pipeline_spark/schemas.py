@@ -6,7 +6,6 @@ Derived from the reference's data model (SURVEY.md §1):
 - per-location ranges:    ``Producer /producer.py:50-78`` ==
                           ``Lambda/lamda.py:30-58`` (kept identical there;
                           that coupling is the validation contract)
-- enriched event fields:  ``Lambda/lamda.py:437-441, 453, 465-471``
 - flattened lake row:     ``Lambda/lamda.py:333-348`` (``_``-separated)
 - star schema:            ``DWH - Redshift/Creating Tables.sql:1-51``
 
@@ -129,6 +128,10 @@ EXTREME_NUMERIC_SENTINELS = [0.0, 9999.0, -9999.0]
 # Event schemas
 # ---------------------------------------------------------------------------
 
+# The original payload text, kept beside the parsed columns: validation
+# reads it for key presence and quoted values, dead letters store it.
+RAW_JSON_COL = "raw_json"
+
 
 def location_struct() -> T.StructType:
     return T.StructType(
@@ -161,24 +164,6 @@ def raw_event_schema() -> T.StructType:
             T.StructField("weather_data", weather_struct()),
         ]
     )
-
-
-def validated_event_fields() -> list[T.StructField]:
-    """Columns appended by validation/alerting (lamda.py:437-471)."""
-    alert_struct = T.StructType(
-        [
-            T.StructField("type", T.StringType()),
-            T.StructField("priority", T.StringType()),
-            T.StructField("description", T.StringType()),
-        ]
-    )
-    return [
-        T.StructField("validation_status", T.StringType()),
-        T.StructField("validation_errors", T.ArrayType(T.StringType())),
-        T.StructField("validation_warnings", T.ArrayType(T.StringType())),
-        T.StructField("validation_timestamp", T.TimestampType()),
-        T.StructField("alerts", T.ArrayType(alert_struct)),
-    ]
 
 
 # ---------------------------------------------------------------------------

@@ -23,9 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import raw_event_schema
+from ..schemas import RAW_JSON_COL, raw_event_schema
 
-RAW_JSON_COL = "raw_json"
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -89,11 +88,6 @@ def parse_base64_payloads(df: DataFrame, payload_col: str = "data") -> DataFrame
     return parse_raw_payloads(decoded, "_payload")
 
 
-def read_raw_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Batch read of the line-delimited raw stream mirror (S4)."""
-    return parse_raw_payloads(spark.read.text(path), "value")
-
-
 def read_raw_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming read of the same wire format (S1/S2 stand-in)."""
     reader = spark.readStream.format("text")
@@ -110,7 +104,9 @@ def parse_kafka_records(records: DataFrame) -> DataFrame:
     becomes ``source_seq``, the analog of the Kinesis sequence number
     the reference stores with dead letters (lamda.py:509). Unit-tested
     on a Kafka-shaped frame — the parse stage is identical whether the
-    records came from the connector or a test fixture.
+    records came from the connector or a test fixture. In production,
+    pass it ``spark.readStream.format("kafka")...load()`` (needs the
+    spark-sql-kafka connector on the classpath).
     """
     with_seq = records.withColumn(
         "_kafka_seq",
@@ -119,28 +115,3 @@ def parse_kafka_records(records: DataFrame) -> DataFrame:
         ),
     )
     return parse_raw_payloads(with_seq, "value", seq_col="_kafka_seq")
-
-
-def read_raw_events_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """S1/S2 production form: ``format("kafka")`` -> the shared parse
-    path (lamda.py:422-428's Kinesis consumer, re-expressed).
-
-    Requires the spark-sql-kafka connector on the classpath. This
-    sandbox ships neither a broker nor the connector jar, so the
-    ``.load()`` itself is untestable here; everything above it —
-    ``parse_kafka_records`` and the whole downstream pipeline — is the
-    unit-tested shared code path.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return parse_kafka_records(raw)

@@ -100,26 +100,6 @@ def parse_kafka_documents(records: DataFrame) -> DataFrame:
     return parsed.select("source_seq", "_d.*")
 
 
-def read_documents_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """Production form of the document drop: ``format("kafka")`` into
-    the shared parse path. Requires the spark-sql-kafka connector on
-    the classpath (not shipped in this sandbox — everything above the
-    ``.load()`` is the unit-tested shared code path)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return parse_kafka_documents(raw)
-
-
 def run_corpus_stream(
     spark: SparkSession,
     source_dir: str,

@@ -1,13 +1,16 @@
 """End-to-end Structured Streaming wrap (SURVEY §3.2 as one query).
 
-``run_stream`` composes: file/Kafka-shaped source -> parse ->
-validate/alert (the SAME batch expression builders — one code path,
-which the reference lacks) -> per-micro-batch:
+``run_stream`` composes: file/Kafka-shaped source -> parse -> per
+micro-batch, the flag frame (``operators.pipeline.process_events``,
+cached) and the processed frame above it (``assemble_events`` — the
+SAME two steps as the batch queries, one code path, which the
+reference lacks) ->
 
 - event_id dedup within the batch + against already-loaded facts (T5:
   at-least-once delivery + idempotent load, README.md:52);
-- routed lake write, ``partitionBy(validation_status, loc_id, date)``
-  Parquet (S5: the reference's valid/ / valid/warnings/ / invalid/
+- routed lake write, Parquet partitioned by
+  ``operators.pipeline.LAKE_PARTITION_BY`` (status, location, event
+  date — S5: the reference's valid/ / valid/warnings/ / invalid/
   prefixes become partition values -> static partition pruning for
   readers; the date key is SURVEY §4's fix for the reference's
   unprunable layout), with ``alerts_sent`` written back onto lake rows
@@ -67,10 +70,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.alerts import with_alerts
-from ..functions.validation import attach_validation_arrays
 from ..operators.pipeline import (
-    event_time,
+    LAKE_PARTITION_BY,
+    assemble_events,
     exploded_alerts,
     flat_lake_row,
     process_events,
@@ -140,8 +142,8 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
         # error/warning arrays + alerts lazily above the cache (see
         # validation.validate_flags — cheaper cache, compilable codegen
         # regions, and status-only consumers prune the array assembly).
-        flagged = process_events(batch_df, assemble=False).persist()
-        processed = attach_validation_arrays(with_alerts(flagged))
+        flagged = process_events(batch_df).persist()
+        processed = assemble_events(flagged)
         lake = alerts = None
         try:
             routed = route(processed)
@@ -192,23 +194,9 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
                 ).alias("alerts_sent")
             )
             # S5 — routed lake (flat row format, lamda.py:333-348),
-            # partitioned by (status, loc, DATE): the date key is
-            # SURVEY §4's fix for the reference's unprunable S3 layout
-            # (lamda.py:365-367 comments the date path out) — at scale
-            # every time-bounded read prunes statically.
-            flat = (
-                flat_lake_row(lake.join(sent, "event_id", "left"))
-                .withColumn("loc_id_part", F.coalesce("loc_id", F.lit("unknown")))
-                .withColumn(
-                    "date",
-                    F.coalesce(
-                        F.to_date(event_time(F.col("timestamp"))),
-                        F.lit("1970-01-01").cast("date"),
-                    ),
-                )
-            )
-            _append_parquet(flat, f"{warehouse_dir}/lake",
-                            ["validation_status", "loc_id_part", "date"])
+            # partitioned by status, location and event date.
+            flat = flat_lake_row(lake.join(sent, "event_id", "left"))
+            _append_parquet(flat, f"{warehouse_dir}/lake", LAKE_PARTITION_BY)
             if jsonl_mirror:  # S4 — debug JSONL mirror of the stream
                 flat.write.mode("append").json(f"{warehouse_dir}/lake_jsonl")
             _append_parquet(alerts, alerts_dir)

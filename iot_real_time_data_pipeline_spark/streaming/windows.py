@@ -61,8 +61,8 @@ def windowed_health(
 ) -> DataFrame:
     """Per-window, per-location health counts + mean temperature.
 
-    Input: the processed stream (``operators.pipeline.process_events``
-    output with ``event_ts``). Works identically on batch frames (the
+    Input: the processed stream (``operators.pipeline.assemble_events``
+    output, with ``event_ts``). Works identically on batch frames (the
     watermark is a no-op there) — one code path, twice usable.
     """
     src = processed

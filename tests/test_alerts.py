@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from iot_real_time_data_pipeline_spark.operators.pipeline import (
+    assemble_events,
     exploded_alerts,
     process_events,
 )
@@ -11,7 +12,7 @@ from .conftest import event_json
 
 
 def alerts_for(parse_payloads, payload):
-    proc = process_events(parse_payloads([payload]))
+    proc = assemble_events(process_events(parse_payloads([payload])))
     return {
         (r.alert_type, r.priority): r.description
         for r in exploded_alerts(proc).collect()
@@ -26,7 +27,7 @@ def test_r1_critical_per_error_class(parse_payloads):
     )
     alerts = alerts_for(parse_payloads, payload)
     assert set(alerts) == {("Sensor Failure", "CRITICAL")} or len(alerts) == 2
-    proc = process_events(parse_payloads([payload]))
+    proc = assemble_events(process_events(parse_payloads([payload])))
     rows = exploded_alerts(proc).collect()
     assert len(rows) == 2
     descs = sorted(r.description for r in rows)
@@ -88,9 +89,8 @@ def test_r6_message_formatting(spark, parse_payloads):
 
     from iot_real_time_data_pipeline_spark.functions.alerts import alert_message
 
-    proc = process_events(
-        parse_payloads([event_json(sensors={"water_level": 0.7})])
-    )
+    parsed = parse_payloads([event_json(sensors={"water_level": 0.7})])
+    proc = assemble_events(process_events(parsed))
     ex = exploded_alerts(proc)
     subject, body = alert_message(
         F.struct(

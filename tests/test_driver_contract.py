@@ -29,6 +29,41 @@ def test_plan_audit_covers_every_registered_query():
     assert not missing, f"queries missing a PLAN_AUDIT row: {missing}"
 
 
+def test_plan_audit_iot_rows_match_rebuilt_plans(spark):
+    """The committed PLAN_AUDIT.md counters of every IoT query equal
+    those of its plan rebuilt at sf0.001 — a change that moves an IoT
+    plan regenerates the audit (``python tools/plan_report.py``).
+
+    The audit is generated with the lake of ``staging_from_lake``
+    already written and no cache materialized; built here the same way
+    (a materialized cache prints its final plan beside the initial one,
+    which doubles its counters)."""
+    import re
+
+    from iot_real_time_data_pipeline_spark.driver_queries import (
+        iot_queries,
+        q_staging_from_lake,
+    )
+    from tools.plan_report import COUNTERS, plan_counters
+
+    from .test_plans import SF_DIR
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(here, "PLAN_AUDIT.md")) as f:
+        committed = {
+            m[0]: [int(v) for v in m[1].split(" | ")]
+            for m in re.findall(r"^\| (\w+) \| ([\d |]+?) \|$", f.read(), flags=re.M)
+        }
+    q_staging_from_lake(spark, SF_DIR)
+    spark.catalog.clearCache()
+    stale = {}
+    for name, counts in plan_counters(spark, SF_DIR, iot_queries()):
+        rebuilt = counts.get("error") or [counts[k] for k in COUNTERS]
+        if committed.get(name) != rebuilt:
+            stale[name] = (committed.get(name), rebuilt)
+    assert not stale, f"(committed, rebuilt): {stale}"
+
+
 def test_driver_window_leads_with_unevidenced_queries():
     """The self-rotating window: after the (computed) sentinels, every
     query that already has a driver CORRECTNESS row must sort BEHIND

@@ -23,7 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iot_real_time_data_pipeline_spark.generator import generate_events
-from iot_real_time_data_pipeline_spark.operators.pipeline import process_events
+from iot_real_time_data_pipeline_spark.operators.pipeline import assemble_events, process_events
 from iot_real_time_data_pipeline_spark.sources.events import parse_raw_payloads
 
 N_EVENTS = 100_000
@@ -53,7 +53,7 @@ def test_label_parity_100k_sweep(spark):
         "value string, scenario string, expected string",
     )
 
-    out = process_events(parse_raw_payloads(labels.select("value")))
+    out = assemble_events(process_events(parse_raw_payloads(labels.select("value"))))
     got = (
         F.when(F.col("json_decode_error"), F.lit("DEAD_LETTER_JSON"))
         .when(F.col("dead_letter"), F.lit("DEAD_LETTER_PROCESSING"))

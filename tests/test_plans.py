@@ -1024,10 +1024,10 @@ def test_staging_from_lake_scan_is_partition_pruned(spark):
     plan = plan_of(df)
     assert "PartitionFilters" in plan
     pf = plan.split("PartitionFilters:")[1].split("]", 1)[0]
-    for key in ("validation_status", "loc_part", "date"):
+    for key in ("validation_status", "loc_id_part", "date"):
         assert key in pf, (key, pf)
     # and none of the three keys degrade to post-scan data filters
-    assert "PushedFilters: []" in plan or "loc_part" not in plan.split(
+    assert "PushedFilters: []" in plan or "loc_id_part" not in plan.split(
         "PushedFilters:"
     )[1].split("]", 1)[0]
 

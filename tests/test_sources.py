@@ -4,7 +4,11 @@ from __future__ import annotations
 
 import base64
 
-from iot_real_time_data_pipeline_spark.operators.pipeline import process_events, route
+from iot_real_time_data_pipeline_spark.operators.pipeline import (
+    assemble_events,
+    process_events,
+    route,
+)
 from iot_real_time_data_pipeline_spark.sources.events import parse_base64_payloads
 
 from .conftest import event_json
@@ -20,7 +24,7 @@ def test_corrupt_payloads_flagged(parse_payloads):
 def test_empty_object_is_valid_json_goes_to_validation(parse_payloads):
     # "{}" decodes fine -> proceeds to validation -> INVALID missing_loc_id
     # (lamda.py behavior: decode succeeds, validation rejects).
-    proc = process_events(parse_payloads(["{}"]))
+    proc = assemble_events(process_events(parse_payloads(["{}"])))
     r = proc.collect()[0]
     assert r.json_decode_error is False
     assert r.validation_status == "INVALID"
@@ -57,17 +61,16 @@ def test_kafka_shaped_records_parse_with_offset_seq(spark):
 
 
 def test_route_splits_lake_and_dead_letter(parse_payloads):
-    proc = process_events(
-        parse_payloads(
-            [
-                event_json(event_id="ok"),
-                event_json(event_id="warn", sensors={"humidity": 93.0}),
-                event_json(event_id="bad", loc_id="loc_9"),
-                "<<garbage>>",
-                event_json(event_id="crash", sensors={"temperature": "NULL"}),
-            ]
-        )
+    parsed = parse_payloads(
+        [
+            event_json(event_id="ok"),
+            event_json(event_id="warn", sensors={"humidity": 93.0}),
+            event_json(event_id="bad", loc_id="loc_9"),
+            "<<garbage>>",
+            event_json(event_id="crash", sensors={"temperature": "NULL"}),
+        ]
     )
+    proc = assemble_events(process_events(parsed))
     routed = route(proc)
     lake = {r.event_id: r.route_prefix for r in routed["lake"].collect()}
     assert lake == {"ok": "valid/", "warn": "valid/warnings/", "bad": "invalid/"}

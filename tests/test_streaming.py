@@ -195,6 +195,7 @@ def test_loader_alerts_equal_replay_fold(spark, tmp_path):
     lake rows: streaming changes no throttle decision."""
     from iot_real_time_data_pipeline_spark.generator import generate_events
     from iot_real_time_data_pipeline_spark.operators.pipeline import (
+        assemble_events,
         exploded_alerts,
         process_events,
         route,
@@ -220,7 +221,8 @@ def test_loader_alerts_equal_replay_fold(spark, tmp_path):
         )
         .collect()
     }
-    lake = route(process_events(_payload_batch(spark, payloads)))["lake"]
+    flagged = process_events(_payload_batch(spark, payloads))
+    lake = route(assemble_events(flagged))["lake"]
     replay = {
         (r.loc_id, r.alert_type): (r.n_sent, r.last_sent_at)
         for r in throttle_stateful_replay(
@@ -737,7 +739,10 @@ def test_dim_appends_skip_the_shuffle_only_on_a_one_partition_lake(
 
 def test_session_window_streaming(spark, tmp_path):
     """T6 extension — gap-based event-time session windows."""
-    from iot_real_time_data_pipeline_spark.operators.pipeline import process_events
+    from iot_real_time_data_pipeline_spark.operators.pipeline import (
+        assemble_events,
+        process_events,
+    )
     from iot_real_time_data_pipeline_spark.sources.events import (
         read_raw_events_stream,
     )
@@ -756,7 +761,7 @@ def test_session_window_streaming(spark, tmp_path):
     (src / "a.jsonl").write_text("\n".join(lines) + "\n")
 
     stream = read_raw_events_stream(spark, str(src))
-    agg = session_activity(process_events(stream), gap="5 minutes")
+    agg = session_activity(assemble_events(process_events(stream)), gap="5 minutes")
     q = (
         agg.writeStream.format("memory")
         .queryName("sess_act")
@@ -785,7 +790,10 @@ def test_windowed_health_streaming(spark, tmp_path):
     from iot_real_time_data_pipeline_spark.sources.events import (
         read_raw_events_stream,
     )
-    from iot_real_time_data_pipeline_spark.operators.pipeline import process_events
+    from iot_real_time_data_pipeline_spark.operators.pipeline import (
+        assemble_events,
+        process_events,
+    )
     from iot_real_time_data_pipeline_spark.streaming.windows import windowed_health
 
     src = tmp_path / "win_src"
@@ -798,7 +806,7 @@ def test_windowed_health_streaming(spark, tmp_path):
     (src / "a.jsonl").write_text("\n".join(lines) + "\n")
 
     stream = read_raw_events_stream(spark, str(src))
-    agg = windowed_health(process_events(stream))
+    agg = windowed_health(assemble_events(process_events(stream)))
     # complete mode: append would emit a window only after the watermark
     # passes its end, which a single availableNow batch never reaches.
     q = (
@@ -1255,7 +1263,10 @@ def test_windowed_distinct_hll_streaming_matches_batch_replay(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from iot_real_time_data_pipeline_spark.operators.pipeline import process_events
+    from iot_real_time_data_pipeline_spark.operators.pipeline import (
+        assemble_events,
+        process_events,
+    )
     from iot_real_time_data_pipeline_spark.sources.events import (
         read_raw_events_stream,
     )
@@ -1283,7 +1294,7 @@ def test_windowed_distinct_hll_streaming_matches_batch_replay(spark, tmp_path):
     (src / "a.jsonl").write_text("\n".join(lines) + "\n")
 
     stream = read_raw_events_stream(spark, str(src))
-    agg = windowed_distinct_hll(process_events(stream))
+    agg = windowed_distinct_hll(assemble_events(process_events(stream)))
     q = (
         agg.writeStream.format("memory")
         .queryName("win_hll")

@@ -6,13 +6,13 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from iot_real_time_data_pipeline_spark.operators.pipeline import process_events
+from iot_real_time_data_pipeline_spark.operators.pipeline import assemble_events, process_events
 
 from .conftest import event_json
 
 
 def run(parse_payloads, payloads):
-    df = process_events(parse_payloads(payloads))
+    df = assemble_events(process_events(parse_payloads(payloads)))
     return df.select(
         "event_id",
         "validation_status",

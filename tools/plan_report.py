@@ -50,18 +50,7 @@ def main() -> int:
     spark = build_session("plan-report")
     spark.sparkContext.setLogLevel("ERROR")
 
-    rows = []
-    for name, fn in E.queries().items():
-        try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        except Exception as ex:  # noqa: BLE001
-            rows.append((name, {"error": str(ex)[:80]}))
-            continue
-        counts = {
-            key: len(re.findall(pat, plan)) for key, pat in COUNTERS.items()
-        }
-        rows.append((name, counts))
-
+    rows = plan_counters(spark, sf_dir, E.queries())
     keys = list(COUNTERS)
     lines = [
         "# PLAN_AUDIT — physical-plan shape counters per registered query",
@@ -94,6 +83,23 @@ def main() -> int:
         fh.write("\n".join(lines))
     print(f"wrote {out_md}: {len(rows)} queries, cartesian={total_cart}")
     return 0
+
+
+def plan_counters(spark, sf_dir: str, queries: dict) -> list[tuple[str, dict]]:
+    """(name, counters) per query, in registry order. A query whose plan
+    fails to build gets ``{"error": <message>}`` in place of counters."""
+    rows = []
+    for name, fn in queries.items():
+        try:
+            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        except Exception as ex:  # noqa: BLE001
+            rows.append((name, {"error": str(ex)[:80]}))
+            continue
+        counts = {
+            key: len(re.findall(pat, plan)) for key, pat in COUNTERS.items()
+        }
+        rows.append((name, counts))
+    return rows
 
 
 if __name__ == "__main__":
