@@ -78,48 +78,6 @@ def salted_agg(
     return partials.groupBy(*key_cols).agg(*phase2_aggs)
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    big_key: str,
-    small_key: str,
-    salt_mod: int = SALT_MOD,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: replicate-small × salt-big.
-
-    The big (skewed) side gets a deterministic row-hash salt in
-    [0, salt_mod); the small side is exploded ``salt_mod``× so every
-    (key, salt) combination exists. The join key becomes (key, salt),
-    spreading a hot key's rows over ``salt_mod`` reducers instead of
-    one straggler task.
-
-    Use when the small side is too big to broadcast but the big side's
-    keys are skewed AND AQE's runtime skew-join split isn't available
-    (disabled, or the skew only materializes downstream of an
-    already-planned exchange). Cost: the small side shuffles
-    ``salt_mod``× its size — pick the smallest mod that flattens the
-    straggler (the join_size_audit operator measures the skew).
-
-    Exact for inner/left joins: every big row meets each matching small
-    row exactly once (its own salt's replica). Returns the joined frame
-    with both key columns and no salt/helper columns.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins")
-    salt = F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(salt_mod))
-    b = big.withColumn("_salt", salt)
-    s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_mod)]))
-    )
-    out = b.join(
-        s,
-        (b[big_key] == s[small_key]) & (b["_salt"] == s["_salt"]),
-        how,
-    )
-    return out.drop(b["_salt"]).drop(s["_salt"])
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

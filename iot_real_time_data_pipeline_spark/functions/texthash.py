@@ -27,7 +27,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 HASH_P = 2_147_483_647  # 2^31 - 1
-CHAR_B = 131
 DOC_B = 257
 
 # MinHash permutation constants — fixed seed so Spark and the SQL

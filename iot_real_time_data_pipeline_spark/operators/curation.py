@@ -601,11 +601,9 @@ def train_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     documents never reassigns an existing one (the property random
     splits lack). The shuffle order is a second independent hash: NOT
     a global ``row_number`` (a single-reducer scan at 100 TB) but a
-    sort KEY — the writer realizes the total order with
-    ``repartitionByRange(shuffle_key).sortWithinPartitions`` so
-    ordering work distributes across executors and file N's keys all
-    precede file N+1's (asserted in tests). Readers stream files in
-    name order and get the global shuffle.
+    sort KEY: a writer realizes the total order with
+    ``repartitionByRange(shuffle_key).sortWithinPartitions``, so
+    ordering work distributes across executors.
 
     Returns ``(doc_id, split, split_bucket, shuffle_key)``.
     """
@@ -620,27 +618,6 @@ def train_split(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         split.alias("split"),
         bucket.alias("split_bucket"),
         shuffle_key(id_col).alias("shuffle_key"),
-    )
-
-
-def write_shuffled_split(
-    assignment: DataFrame, path: str, n_files: int = 8
-) -> None:
-    """Materialize the training order: range-partition on the shuffle
-    key (distributed total sort — each output file covers a disjoint
-    key range, files ordered by name) and write one split directory
-    per membership class for partition-pruned reads.
-    """
-    (
-        assignment.repartitionByRange(n_files, "shuffle_key")
-        # 'split' leads the sort so the dynamic-partition writer's
-        # required ordering (partition columns first) is already
-        # satisfied and its own re-sort — which would destroy the
-        # shuffle order — is skipped.
-        .sortWithinPartitions("split", "shuffle_key", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("split")
-        .parquet(path)
     )
 
 
@@ -916,31 +893,6 @@ def temperature_mix_plan(
             f"(((corpus_tokens * {budget_permille} div 1000)"
             " * weight_micro) div w_total * 1000) div n_tokens"
         ).alias("epochs_milli"),
-    )
-
-
-def split_leakage(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
-    """Split-leakage detector: near-duplicate document pairs whose
-    members landed in DIFFERENT train/val/test splits — the silent eval
-    inflation a hash split cannot prevent (splits are per-document;
-    near-dups are cross-document). Run after any split re-cut; a clean
-    corpus (dedup BEFORE splitting) returns zero rows.
-
-    Composition: the MinHash-LSH pair generator (banded candidates +
-    exact Jaccard verify, shuffle ∝ band collisions) joined to the
-    broadcast split assignment on both endpoints, keeping pairs that
-    straddle splits. Returns ``(doc_a, doc_b, split_a, split_b,
-    jaccard)``.
-    """
-    pairs = DD.minhash_lsh_pairs(docs, threshold=threshold)
-    splits = train_split(docs).select("doc_id", "split")
-    sa = splits.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a"))
-    sb = splits.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b"))
-    return (
-        pairs.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .filter(F.col("split_a") != F.col("split_b"))
-        .select("doc_a", "doc_b", "split_a", "split_b", "jaccard")
     )
 
 

@@ -246,8 +246,7 @@ def hourly_rollup(events: DataFrame, bucket_sec: int = ROLLUP_BUCKET_SEC) -> Dat
 
     Pure partial aggregation — shuffle is the rollup grid (types x
     hours), independent of event volume; exactly the shape a streaming
-    job maintains incrementally with event-time windows
-    (``streaming/windows.py``), here as the batch/backfill twin.
+    job would maintain incrementally with event-time windows.
 
     Returns ``(event_type, bucket_start_sec, n_events, sum_value_c,
     avg_value_cc)`` — value cents are per-row quantized before the sum,
@@ -269,41 +268,6 @@ def hourly_rollup(events: DataFrame, bucket_sec: int = ROLLUP_BUCKET_SEC) -> Dat
             "n_events",
             "sum_value_c",
             F.expr("(sum_value_c * 100) div n_events").alias("avg_value_cc"),
-        )
-    )
-
-
-def streaming_rollup(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark_delay: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming twin of :func:`hourly_rollup`: the same (event_type,
-    hour-bucket) grid maintained incrementally with event-time windows
-    and watermark-bounded state. One code path for live maintenance and
-    batch backfill — on a batch frame the watermark is a no-op and the
-    result equals ``hourly_rollup`` bucket-for-bucket (proven by
-    test_streaming_rollup_matches_batch).
-
-    Value cents are quantized per row BEFORE the sum, like the batch
-    twin, so backfill and live totals are bit-identical.
-    """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark_delay)
-    value_c = F.round(F.col("value") * 100).cast("long")
-    return (
-        src.groupBy(F.window(ts_col, window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(value_c).alias("sum_value_c"),
-        )
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            "event_type",
-            "n_events",
-            "sum_value_c",
         )
     )
 
@@ -1841,39 +1805,6 @@ def winsorized_stats(events: DataFrame, trim_div: int = WINSOR_TRIM_DIV) -> Data
     )
 
 
-def streaming_hopping_rollup(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark_delay: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming twin of :func:`hopping_rollup`: Spark's native sliding
-    event-time windows maintain the same overlapping (type, window)
-    grid incrementally, watermark-bounded. Epoch-aligned window starts
-    mean the streaming grid lands EXACTLY on the batch integer grid
-    (``ts div slide`` buckets) — proven by the parity test, so backfill
-    (batch) and live (stream) rollups are interchangeable.
-    """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark_delay)
-    value_c = F.round(F.col("value") * 100).cast("long")
-    return (
-        src.groupBy(F.window(ts_col, window, slide).alias("w"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(value_c).alias("sum_value_c"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value_c",
-        )
-    )
-
-
 def cusum_changepoint(events: DataFrame) -> DataFrame:
     """CUSUM changepoint summary per event type: cumulative deviation
     of the daily value totals from the per-type mean, reporting the day
@@ -2150,9 +2081,7 @@ def range_join_bucketed(
     event's own grain), so no dedup is needed. Shuffle ∝ events +
     exploded intervals; a 100 TB stream range-joins against a million
     campaign windows without a nested loop. (Same trick databases
-    ship as "bucketed range join"; the streaming twin is
-    ``streaming/windows.correlate_streams``' watermarked interval
-    join.)
+    ship as "bucketed range join".)
 
     Inputs: events carrying ``ts_sec``; intervals
     ``(interval_day, w_start, w_end)`` half-open epoch seconds.

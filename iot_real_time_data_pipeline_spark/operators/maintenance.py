@@ -15,7 +15,9 @@ Design notes for scale:
 - Compaction is per-partition-directory and embarrassingly parallel
   ACROSS partitions; this implementation drives partitions from the
   directory listing and rewrites each with a targeted ``coalesce`` (a
-  narrow, shuffle-free repack of that partition's scan splits).
+  narrow, shuffle-free repack of that partition's scan splits). It
+  schedules one job per partition from the driver, which is right for
+  the few hundred partitions a loader's sinks hold.
 - Rewrite-then-swap: the new files land in a HIDDEN (dot-prefixed)
   sibling dir — invisible to Spark's listing while staged — and the
   swap is two directory renames, so a reader never sees a
@@ -28,9 +30,9 @@ Design notes for scale:
   there this module's swap degrades to copy+delete and the correct
   production answer is a manifest-based table format (Delta/Iceberg/
   Hudi), whose commit protocol is exactly the logical swap performed
-  here at the filesystem level. The operators' PLANS (per-partition
-  coalesce, one-job global repartition, footer-stats file pruning)
-  carry over unchanged.
+  here at the filesystem level. The per-partition coalesce plan
+  carries over unchanged.
+- ``vacuum_lake`` removes the scratch dirs an interrupted swap leaves.
 """
 
 from __future__ import annotations
@@ -38,8 +40,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 TARGET_FILES_PER_PARTITION = 1
 
@@ -124,93 +125,15 @@ def compact_lake(
     return report
 
 
-def _partition_cols(root: str) -> list[str]:
-    """Hive partition-column names, parsed from the first leaf dir's
-    ``key=value`` path segments (what Spark's own listing infers)."""
-    leaves = _leaf_partition_dirs(root)
-    if not leaves:
-        return []
-    rel = os.path.relpath(leaves[0], root)
-    return [seg.split("=", 1)[0] for seg in rel.split(os.sep) if "=" in seg]
-
-
-def compact_lake_global(
-    spark: SparkSession,
-    root: str,
-    target_files: int = TARGET_FILES_PER_PARTITION,
-) -> dict:
-    """Whole-lake compaction in ONE Spark job — the 100 TB counterpart
-    of :func:`compact_lake`.
-
-    The per-partition loop is right for a few hundred partitions (no
-    shuffle, each rewrite is a narrow coalesce), but it schedules one
-    job per partition from the driver: at 100k partitions the
-    scheduling round-trips dominate and the cluster idles between
-    jobs. This variant reads the whole lake once, hash-repartitions on
-    the partition columns (one shuffle, fully parallel across
-    executors), and writes every partition's ``target_files`` files in
-    a single ``partitionBy`` pass. The staged output replaces the lake
-    root in one rename — same crash/concurrent-reader safety as the
-    per-partition swap.
-
-    Trade: pays one full-lake shuffle the loop variant avoids — worth
-    it exactly when partition COUNT, not bytes, is the bottleneck.
-
-    Returns ``{n_partitions, files_before, files_after}``.
-    """
-    parts = _partition_cols(root)
-    leaves = _leaf_partition_dirs(root)
-    files_before = sum(
-        1
-        for leaf in leaves
-        for f in os.listdir(leaf)
-        if f.endswith(".parquet")
-    )
-    df = spark.read.parquet(root)
-    base = root.rstrip("/")
-    staged = _hidden_sibling(base, "._compacting")
-    shutil.rmtree(staged, ignore_errors=True)
-    writer = (
-        df.repartition(*[F.col(c) for c in parts])
-        if parts
-        else df.coalesce(target_files)
-    )
-    if parts and target_files > 1:
-        # spread each partition over target_files writers via a
-        # deterministic row-hash salt (never rand(): reruns must lay
-        # out identically)
-        salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(target_files))
-        writer = df.repartition(*([F.col(c) for c in parts] + [salt]))
-    w = writer.write.mode("overwrite")
-    if parts:
-        w = w.partitionBy(*parts)
-    w.parquet(staged)
-    _swap_dirs(base, staged)
-    leaves_after = _leaf_partition_dirs(base)
-    files_after = sum(
-        1
-        for leaf in leaves_after
-        for f in os.listdir(leaf)
-        if f.endswith(".parquet")
-    )
-    return {
-        "n_partitions": len(leaves_after),
-        "files_before": files_before,
-        "files_after": files_after,
-    }
-
-
-_SCRATCH_SUFFIXES = (
-    "._old", "._compacting", "._merge_staged", "._merge_scratch"
-)
+_SCRATCH_SUFFIXES = ("._old", "._compacting")
 
 
 def vacuum_lake(root: str, dry_run: bool = False) -> list[str]:
     """Remove crash debris: hidden scratch dirs an interrupted
-    compaction/merge left behind (``.*._old``, ``.*._compacting``,
-    ``.*._merge_*``). Safe at any time — live readers never reference
-    these dirs (Spark's listing skips dot-prefixed names; the swap
-    protocol only renames fully-written dirs into visible paths).
+    compaction left behind (``.*._old``, ``.*._compacting``). Safe at
+    any time — live readers never reference these dirs (Spark's listing
+    skips dot-prefixed names; the swap protocol only renames
+    fully-written dirs into visible paths).
 
     ``dry_run=True`` lists without deleting. Returns the affected
     paths. The table-format analog is ``VACUUM``/expire-snapshots.
@@ -225,187 +148,3 @@ def vacuum_lake(root: str, dry_run: bool = False) -> list[str]:
         for p in debris:
             shutil.rmtree(p, ignore_errors=True)
     return sorted(debris)
-
-
-def lake_file_stats(spark: SparkSession, root: str) -> DataFrame:
-    """Small-file diagnostic over a partitioned lake: per leaf
-    partition, the file count and byte sizes — the query an operator
-    runs to DECIDE whether compaction is due. Driver-side listing is
-    proportional to partition count (not rows); at real scale this
-    reads the lake manifest/catalog instead."""
-    rows = []
-    for leaf in _leaf_partition_dirs(root):
-        files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
-        sizes = [os.path.getsize(os.path.join(leaf, f)) for f in files]
-        rows.append(
-            (
-                os.path.relpath(leaf, root),
-                len(files),
-                int(sum(sizes)),
-                int(min(sizes)) if sizes else 0,
-                int(max(sizes)) if sizes else 0,
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "partition string, n_files long, total_bytes long, "
-        "min_bytes long, max_bytes long",
-    )
-
-
-def _parquet_files(root: str) -> list[str]:
-    return sorted(
-        os.path.join(root, f)
-        for f in os.listdir(root)
-        if f.endswith(".parquet")
-    )
-
-
-def _file_key_bounds(path: str, key_col: str) -> tuple[int, int] | None:
-    """(min, max) of ``key_col`` across a parquet file's row groups,
-    from footer statistics only — no data pages read. None when stats
-    are absent (treat as always-matching)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}[key_col]
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return (lo, hi) if lo is not None else None
-
-
-def merge_into_lake(
-    spark: SparkSession,
-    root: str,
-    changes: DataFrame,
-    key_col: str,
-) -> dict:
-    """Copy-on-write MERGE into a directory of parquet files — the
-    file-level half of the lakehouse upsert (`warehouse.
-    merge_upsert_summary` is the row-level plan; this is the WRITE
-    path Delta/Iceberg implement): only files whose footer min/max key
-    range intersects the change batch are rewritten; untouched files
-    are left byte-identical, inserts land as new files.
-
-    ``changes`` carries ``op`` ('U' update / 'D' delete / 'I' insert)
-    plus the full lake schema; updates replace the whole row for their
-    key (change-row columns taken verbatim, NULLs included). Planning is
-    driver-side over footer STATISTICS only (the manifest scan every
-    table format does — cost ∝ files, zero data pages); matched-file
-    rewrite is a Spark scan of JUST those files with the change batch
-    broadcast. The post-merge file set is staged in a hidden sibling
-    dir (untouched files hardlinked, zero-copy) and the root flips in
-    one rename — a crash or concurrent reader sees either the old lake
-    or the new one, never a mix.
-
-    Returns ``{n_files_total, n_files_rewritten, n_rows_updated,
-    n_rows_deleted, n_rows_inserted}``.
-    """
-    files = _parquet_files(root)
-    # The CDC contract: the change batch is small. Its key set drives
-    # file pruning (sorted driver-side list, like a format manifest).
-    ch = changes.persist()
-    keys = sorted(
-        r["k"]
-        for r in ch.filter(F.col("op").isin("U", "D"))
-        .select(F.col(key_col).alias("k"))
-        .distinct()
-        .collect()
-    )
-    import bisect
-
-    def overlaps(bounds: tuple[int, int] | None) -> bool:
-        if not keys:
-            return False
-        if bounds is None:
-            return True
-        lo, hi = bounds
-        i = bisect.bisect_left(keys, lo)
-        return i < len(keys) and keys[i] <= hi
-
-    matched = [f for f in files if overlaps(_file_key_bounds(f, key_col))]
-    matched_set = set(matched)
-
-    # Stage the ENTIRE post-merge file set in a hidden sibling dir:
-    # untouched files are hardlinked (zero-copy, same inode — the
-    # manifest trick table formats do logically), rewritten/inserted
-    # files land under new names. The root then flips in one rename.
-    base = root.rstrip("/")
-    staged = _hidden_sibling(base, "._merge_staged")
-    scratch = _hidden_sibling(base, "._merge_scratch")
-    shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(scratch, ignore_errors=True)
-    os.makedirs(staged)
-    for f in files:
-        if f not in matched_set:
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-
-    def _stage_write(df: DataFrame, n_files: int, prefix: str) -> None:
-        df.coalesce(max(1, n_files)).write.mode("overwrite").parquet(scratch)
-        for i, f in enumerate(
-            sorted(x for x in os.listdir(scratch) if x.endswith(".parquet"))
-        ):
-            shutil.move(
-                os.path.join(scratch, f),
-                os.path.join(staged, f"{prefix}-{i:05d}-{f}"),
-            )
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    n_upd = n_del = 0
-    if matched:
-        data_cols = [c for c in spark.read.parquet(matched[0]).columns]
-        upd = ch.filter(F.col("op") == "U").select(
-            *[F.col(c).alias(f"_new_{c}") for c in data_cols]
-        )
-        dels = ch.filter(F.col("op") == "D").select(
-            F.col(key_col).alias("_del_key")
-        )
-        cur = spark.read.parquet(*matched)
-        joined = cur.join(
-            F.broadcast(upd),
-            cur[key_col] == F.col(f"_new_{key_col}"),
-            "left",
-        ).join(
-            F.broadcast(dels), cur[key_col] == F.col("_del_key"), "left"
-        )
-        is_upd = F.col(f"_new_{key_col}").isNotNull()
-        is_del = F.col("_del_key").isNotNull()
-        # One aggregation pass for both counters. A key that is both
-        # updated and deleted counts only as deleted (the update never
-        # becomes visible).
-        counts = joined.agg(
-            F.sum(F.when(is_upd & ~is_del, 1).otherwise(0)).alias("u"),
-            F.sum(F.when(is_del, 1).otherwise(0)).alias("d"),
-        ).collect()[0]
-        n_upd, n_del = int(counts["u"] or 0), int(counts["d"] or 0)
-        # Updates replace the WHOLE row: take the change row's columns
-        # verbatim (NULLs included) — no per-column coalesce.
-        rewritten = joined.filter(~is_del).select(
-            *[
-                F.when(is_upd, F.col(f"_new_{c}")).otherwise(cur[c]).alias(c)
-                for c in data_cols
-            ]
-        )
-        _stage_write(rewritten, len(matched), "merged")
-
-    ins = ch.filter(F.col("op") == "I").drop("op")
-    n_ins = ins.count()
-    if n_ins:
-        _stage_write(ins, 1, "inserted")
-    ch.unpersist()
-
-    # Flip: old root aside, staged in, old gone — one visible transition.
-    _swap_dirs(base, staged)
-
-    return {
-        "n_files_total": len(files),
-        "n_files_rewritten": len(matched),
-        "n_rows_updated": int(n_upd),
-        "n_rows_deleted": int(n_del),
-        "n_rows_inserted": int(n_ins),
-    }

@@ -391,22 +391,6 @@ def hll_distinct(events: DataFrame) -> DataFrame:
             "sum_hit"
         ),
     )
-    return with_hll_estimate(per_type).select(
-        "event_type",
-        "n_buckets_hit",
-        "sum_scaled",
-        "hll_raw_estimate",
-        "hll_estimate",
-    )
-
-
-def with_hll_estimate(per_group: DataFrame) -> DataFrame:
-    """Append ``sum_scaled`` / ``hll_raw_estimate`` / ``hll_estimate``
-    to any frame carrying HLL partials ``n_buckets_hit`` + ``sum_hit``
-    — the shared estimate tail of the batch sketch and the streaming
-    windowed form (same integer core, same linear-counting branch)."""
-    from ..functions import texthash as TH
-
     m, sc = HLL_M, HLL_SCALE
     sum_scaled = (
         F.col("sum_hit")
@@ -422,9 +406,16 @@ def with_hll_estimate(per_group: DataFrame) -> DataFrame:
         TH.quantized6(F.lit(float(m)) * F.log(F.lit(m).cast("double") / zeros.cast("double"))),
     ).otherwise(F.col("hll_raw_estimate").cast("double"))
     return (
-        per_group.withColumn("sum_scaled", sum_scaled)
+        per_type.withColumn("sum_scaled", sum_scaled)
         .withColumn("hll_raw_estimate", raw.cast("long"))
         .withColumn("hll_estimate", corrected)
+        .select(
+            "event_type",
+            "n_buckets_hit",
+            "sum_scaled",
+            "hll_raw_estimate",
+            "hll_estimate",
+        )
     )
 
 

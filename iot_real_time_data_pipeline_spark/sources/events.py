@@ -115,3 +115,28 @@ def parse_kafka_records(records: DataFrame) -> DataFrame:
         ),
     )
     return parse_raw_payloads(with_seq, "value", seq_col="_kafka_seq")
+
+
+DOC_STREAM_SCHEMA = (
+    "doc_id long, text string, lang string, source string, ingest_ts timestamp"
+)
+
+
+def parse_kafka_documents(records: DataFrame) -> DataFrame:
+    """Kafka-source-shaped records -> documents frame (schema
+    ``DOC_STREAM_SCHEMA``); the document twin of ``parse_kafka_records``.
+
+    Expects the same Kafka source contract columns (``value`` binary
+    JSON of one document, ``partition`` int, ``offset`` long); the
+    partition-offset pair rides along as ``source_seq`` for dead-letter
+    traceability.
+    """
+    parsed = records.select(
+        F.concat_ws(
+            "-", F.col("partition").cast("string"), F.col("offset").cast("string")
+        ).alias("source_seq"),
+        F.from_json(
+            F.col("value").cast("string"), DOC_STREAM_SCHEMA
+        ).alias("_d"),
+    )
+    return parsed.select("source_seq", "_d.*")

@@ -19,6 +19,17 @@ import os
 import pytest
 
 
+def _drop_cached_lake(sf_dir):
+    """Remove the lake ``q_staging_from_lake`` cached in the temp dir
+    for ``sf_dir``: its key names this run's pytest directory, so no
+    later run reads it back."""
+    import shutil
+
+    from iot_real_time_data_pipeline_spark.driver_queries import _lake_dir
+
+    shutil.rmtree(_lake_dir(sf_dir), ignore_errors=True)
+
+
 @pytest.fixture(scope="module")
 def degenerate_dir(spark, tmp_path_factory):
     """A full 10-table directory in the driver's exact schemas, filled
@@ -123,7 +134,8 @@ def degenerate_dir(spark, tmp_path_factory):
              ts0 + datetime.timedelta(days=901)),
         ],
     )
-    return d
+    yield d
+    _drop_cached_lake(d)
 
 
 def _run_family(spark, degenerate_dir, prefix):
@@ -202,7 +214,8 @@ def empty_dir(spark, tmp_path_factory):
         spark.createDataFrame([], s).write.mode("overwrite").parquet(
             os.path.join(d, f"{t}.parquet")
         )
-    return d
+    yield d
+    _drop_cached_lake(d)
 
 
 def test_empty_tables_every_query_executes(spark, empty_dir):

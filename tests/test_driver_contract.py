@@ -32,18 +32,10 @@ def test_plan_audit_covers_every_registered_query():
 def test_plan_audit_iot_rows_match_rebuilt_plans(spark):
     """The committed PLAN_AUDIT.md counters of every IoT query equal
     those of its plan rebuilt at sf0.001 — a change that moves an IoT
-    plan regenerates the audit (``python tools/plan_report.py``).
-
-    The audit is generated with the lake of ``staging_from_lake``
-    already written and no cache materialized; built here the same way
-    (a materialized cache prints its final plan beside the initial one,
-    which doubles its counters)."""
+    plan regenerates the audit (``python tools/plan_report.py``)."""
     import re
 
-    from iot_real_time_data_pipeline_spark.driver_queries import (
-        iot_queries,
-        q_staging_from_lake,
-    )
+    from iot_real_time_data_pipeline_spark.driver_queries import iot_queries
     from tools.plan_report import COUNTERS, plan_counters
 
     from .test_plans import SF_DIR
@@ -54,8 +46,6 @@ def test_plan_audit_iot_rows_match_rebuilt_plans(spark):
             m[0]: [int(v) for v in m[1].split(" | ")]
             for m in re.findall(r"^\| (\w+) \| ([\d |]+?) \|$", f.read(), flags=re.M)
         }
-    q_staging_from_lake(spark, SF_DIR)
-    spark.catalog.clearCache()
     stale = {}
     for name, counts in plan_counters(spark, SF_DIR, iot_queries()):
         rebuilt = counts.get("error") or [counts[k] for k in COUNTERS]
@@ -190,3 +180,120 @@ def test_readme_query_count_matches_registry():
         f"README says {m.group(1)} but the registry has "
         f"{len(E.queries())} — update README.md"
     )
+
+
+# Top-level package definitions that nothing outside tests/ references,
+# kept on purpose, keyed "<module>.<name>" (module relative to the
+# package). Everything else with no caller is deleted with the tests
+# that only exercise it (ROADMAP direction 6).
+_KEPT_WITHOUT_CALLER = {
+    "schemas.staging_schema":
+        "the staging contract as a StructType; the star tests build their fixtures on it",
+    "operators.maintenance.compact_lake":
+        "sink-layer compaction, to be wired into the loader (ROADMAP direction 4)",
+    "operators.maintenance.vacuum_lake":
+        "sink-layer crash-debris cleanup, to be wired into the loader (ROADMAP direction 4)",
+    **dict.fromkeys(
+        (
+            "operators.multimodal.with_wav_payload",
+            "operators.multimodal.wav_features",
+            "operators.multimodal.wav_frame_energy",
+            "operators.multimodal.wav_decimate",
+            "operators.multimodal.with_bmp_payload",
+            "operators.multimodal.bmp_features",
+            "operators.multimodal.bmp_resize",
+            "operators.multimodal.image_dup_pairs",
+        ),
+        "unfused multimodal chain: the fused *_from_ids operators are tested against it",
+    ),
+    "operators.similarity.cosine_dup_pairs_exact":
+        "exact all-pairs reference the LSH near-duplicate operator is tested against",
+    "operators.similarity.assignment_centroids":
+        "k-means update step; kmeans_assign's centroids= path is tested through it",
+    "operators.similarity.pca_components":
+        "gram_matrix's output is tested through the PCA it feeds",
+    "operators.similarity.pca_project":
+        "gram_matrix's output is tested through the PCA it feeds",
+    "operators.sketches.cms_estimate":
+        "point query of the count-min sketch; the sketch is tested through it",
+    "functions.alerts.alert_message":
+        "the reference's R6 alert subject/body (lamda.py), pinned by test_r6_message_formatting",
+    "sources.events.parse_base64_payloads":
+        "tested ingest variant of the one payload parser (base64 records)",
+    "sources.events.parse_kafka_records":
+        "tested ingest variant of the one payload parser (Kafka-shaped records)",
+    "sources.events.parse_kafka_documents":
+        "tested ingest variant for documents (Kafka-shaped records)",
+    "operators.curation.write_corpus":
+        "open (ROADMAP direction 6): only test_write_corpus_partitions_prune runs it",
+    "operators.similarity.ivf_index_topk":
+        "open (ROADMAP direction 6): only test_ivf_index_search_prunes_partitions runs it",
+    "operators.sketches.approx_user_stats":
+        "open (ROADMAP direction 6): only test_approx_user_stats_error_bounds runs it",
+    "functions.flatten.flatten":
+        "open (ROADMAP direction 6): only test_flatten_compiler_matches_reference_scheme runs it",
+    "functions.scalars.round2":
+        "open (ROADMAP direction 6): only test_round2_and_clamp runs it",
+    "functions.scalars.clamp":
+        "open (ROADMAP direction 6): only test_round2_and_clamp runs it",
+    "functions.skew.salted_agg":
+        "open (ROADMAP direction 6): only test_salted_agg_matches_unsalted runs it",
+}
+
+
+def test_every_package_definition_has_a_caller():
+    """Every top-level definition of the package is referenced from the
+    package, ``bench.py``, ``tools/``, ``perfbench/`` or
+    ``__spark_entry__.py`` — or is listed in ``_KEPT_WITHOUT_CALLER``
+    with its reason. A definition only tests run is dead weight: it goes
+    with those tests. A name counts as referenced when it is loaded or
+    read as an attribute outside its own definition; an import alone
+    (a re-export) is not a reference. Pure AST scan, no Spark."""
+    import ast
+    from collections import Counter
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "iot_real_time_data_pipeline_spark"
+
+    def refs(node):
+        c = Counter()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+                c[n.id] += 1
+            elif isinstance(n, ast.Attribute):
+                c[n.attr] += 1
+        return c
+
+    paths = [os.path.join(here, f) for f in ("bench.py", "__spark_entry__.py")]
+    for top in (pkg, "tools", "perfbench"):
+        for d, _, files in os.walk(os.path.join(here, top)):
+            paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    total, defs = Counter(), []
+    for p in paths:
+        with open(p) as f:
+            tree = ast.parse(f.read())
+        total += refs(tree)
+        rel = os.path.relpath(p, os.path.join(here, pkg))
+        if rel.startswith(".."):
+            continue
+        module = rel[: -len(".py")].replace(os.sep, ".")
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            own = refs(node)
+            defs += [(f"{module}.{n}", n, own[n]) for n in names if not n.startswith("__")]
+    uncalled = {key for key, name, own in defs if total[name] - own <= 0}
+    unlisted = sorted(uncalled - set(_KEPT_WITHOUT_CALLER))
+    assert not unlisted, (
+        f"definitions with no caller outside tests/: {unlisted} — delete "
+        "them with the tests that only exercise them, or list them in "
+        "_KEPT_WITHOUT_CALLER with a reason"
+    )
+    stale = sorted(set(_KEPT_WITHOUT_CALLER) - uncalled)
+    assert not stale, f"_KEPT_WITHOUT_CALLER entries that now have a caller or are gone: {stale}"

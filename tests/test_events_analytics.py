@@ -165,61 +165,6 @@ def test_hourly_rollup_buckets_and_cents(spark):
     assert out[("click", 0)].n_events == 1
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    """The streaming event-time rollup, drained with availableNow over
-    a file source, lands on exactly the batch hourly_rollup grid."""
-    import datetime
-    import json as _json
-
-    base = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    rows = []
-    for i, (etype, minutes, value) in enumerate(
-        [
-            ("view", 5, 1.25),
-            ("view", 59, 2.50),
-            ("view", 61, 10.0),
-            ("click", 10, 1.0),
-            ("click", 200, 3.0),
-        ]
-    ):
-        rows.append(
-            {
-                "event_id": i,
-                "user_id": 1,
-                "event_type": etype,
-                "value": value,
-                "ts": (base + datetime.timedelta(minutes=minutes)).isoformat(),
-            }
-        )
-    src = tmp_path / "events_src"
-    src.mkdir()
-    (src / "part.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    schema = "event_id long, user_id long, event_type string, value double, ts timestamp"
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = (
-        EA.streaming_rollup(stream)
-        .writeStream.format("memory")
-        .queryName("rollup_parity")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    live = {
-        (r.event_type, int(r.bucket_start.timestamp())): (r.n_events, r.sum_value_c)
-        for r in spark.sql("SELECT * FROM rollup_parity").collect()
-    }
-
-    batch_df = EA.with_ts_sec(spark.read.schema(schema).json(str(src)))
-    batch = {
-        (r.event_type, r.bucket_start_sec): (r.n_events, r.sum_value_c)
-        for r in EA.hourly_rollup(batch_df).collect()
-    }
-    assert live == batch
-    assert len(batch) == 4
-
-
 def test_value_anomalies_flags_only_outliers(spark):
     # 40 values at ~10, one at 1000: only the spike exceeds 3 sigma
     rows = [(i, 1, "view", 10.0 + (i % 3), 0) for i in range(40)]
@@ -1036,66 +981,6 @@ def test_winsorized_stats_tiny_group_degenerates_to_min_max(spark):
     # n=2: lo_rank=1, hi_rank=2 -> cutoffs are min/max, nothing clips
     assert (out.cut_lo_c, out.cut_hi_c) == (100, 900)
     assert out.n_clipped_lo == 0 and out.n_clipped_hi == 0
-
-
-def test_streaming_hopping_rollup_matches_batch_grid(spark, tmp_path):
-    """The native sliding-window streaming rollup, drained with
-    availableNow, lands on exactly the batch integer hop grid."""
-    import datetime
-    import json as _json
-
-    base = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    rows = []
-    for i, (etype, minutes, value) in enumerate(
-        [
-            ("view", 5, 1.25),
-            ("view", 59, 2.50),
-            ("view", 61, 10.0),
-            ("click", 10, 1.0),
-            ("click", 200, 3.0),
-        ]
-    ):
-        rows.append(
-            {
-                "event_id": i,
-                "user_id": 1,
-                "event_type": etype,
-                "value": value,
-                "ts": (base + datetime.timedelta(minutes=minutes)).isoformat(),
-            }
-        )
-    src = tmp_path / "hop_src"
-    src.mkdir()
-    (src / "part.json").write_text("\n".join(_json.dumps(r) for r in rows))
-
-    schema = "event_id long, user_id long, event_type string, value double, ts timestamp"
-    stream = spark.readStream.schema(schema).json(str(src))
-    q = (
-        EA.streaming_hopping_rollup(stream)
-        .writeStream.format("memory")
-        .queryName("hop_parity")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    live = {
-        (r.event_type, int(r.window_start.timestamp())): (r.n_events, r.sum_value_c)
-        for r in spark.sql("SELECT * FROM hop_parity").collect()
-    }
-
-    batch_events = spark.createDataFrame(
-        [(r["event_id"], r["user_id"], r["event_type"], r["value"],
-          int(datetime.datetime.fromisoformat(r["ts"]).replace(
-              tzinfo=datetime.timezone.utc).timestamp()))
-         for r in rows],
-        "event_id long, user_id long, event_type string, value double, ts_sec long",
-    )
-    batch = {
-        (r.event_type, r.window_start_sec): (r.n_events, r.sum_value_c)
-        for r in EA.hopping_rollup(batch_events).collect()
-    }
-    assert live == batch and live
 
 
 def test_cusum_changepoint_finds_level_shift(spark):

@@ -1509,31 +1509,6 @@ def test_train_split_stable_under_corpus_growth(spark):
     assert c["train"] > 0.9 * len(full)
 
 
-def test_write_shuffled_split_realizes_global_order(spark, tmp_path):
-    """Range-partitioned write: file N's shuffle keys all precede file
-    N+1's, and each file is internally sorted — a distributed total
-    order with no single-reducer sort."""
-    import glob as _glob
-
-    from iot_real_time_data_pipeline_spark.entrypoints import read_table
-    from iot_real_time_data_pipeline_spark.operators import curation as CUR
-
-    docs = read_table(spark, "/root/testdata/sf0.001", "documents")
-    path = str(tmp_path / "split_out")
-    CUR.write_shuffled_split(CUR.train_split(docs), path, n_files=4)
-
-    files = sorted(_glob.glob(f"{path}/split=train/part-*.parquet"))
-    assert len(files) >= 2
-    prev_hi = None
-    for f in files:
-        keys = [r.shuffle_key for r in spark.read.parquet(f).collect()]
-        assert keys == sorted(keys)  # sorted within file
-        if prev_hi is not None and keys:
-            assert keys[0] >= prev_hi  # disjoint ascending ranges
-        if keys:
-            prev_hi = keys[-1]
-
-
 # ---------------------------------------------------------------------------
 # Hashed linear classifier
 # ---------------------------------------------------------------------------
@@ -2391,45 +2366,6 @@ def test_pq_topk_recall_vs_exact(spark):
     # chance recall of 10-of-499 candidates is ~0.02; require >= 10x that
     assert hits / total >= 0.2, (hits, total)
     emb.unpersist()
-
-
-def test_split_leakage_planted(spark):
-    """Plant a near-dup pair whose ids land in different splits and
-    assert the detector reports exactly the cross-split pairs. The ids
-    are chosen by probing split_hash: we generate candidates until we
-    have two near-identical texts in different splits and two in the
-    same split (regression against both false negatives and false
-    positives). Deterministic: split_hash is a fixed md5 hash."""
-    from iot_real_time_data_pipeline_spark.operators import curation as CUR
-
-    # find ids per split deterministically
-    probe = spark.createDataFrame(
-        [(i,) for i in range(1, 400)], "doc_id long"
-    )
-    splits = {r.doc_id: r.split for r in CUR.train_split(probe).collect()}
-    trains = [i for i, s in splits.items() if s == "train"]
-    non_train = [i for i, s in splits.items() if s != "train"]
-    assert len(trains) >= 2 and non_train, splits
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (trains[0], base + " one", "en"),          # near-dup, train
-        (non_train[0], base + " two", "en"),       # near-dup, val/test -> LEAK
-        (trains[1], base + " three", "en"),        # near-dup, train (same split as 0)
-        (trains[0] + 1000 if (trains[0] + 1000) not in splits else 9999,
-         "completely different content entirely unrelated words here", "en"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = CUR.split_leakage(df, threshold=0.5).collect()
-    pairs = {(r.doc_a, r.doc_b) for r in out}
-    leak_pair = (min(trains[0], non_train[0]), max(trains[0], non_train[0]))
-    leak_pair2 = (min(trains[1], non_train[0]), max(trains[1], non_train[0]))
-    assert leak_pair in pairs and leak_pair2 in pairs
-    # the same-split near-dup pair must NOT be reported
-    same_pair = (min(trains[0], trains[1]), max(trains[0], trains[1]))
-    assert same_pair not in pairs
-    for r in out:
-        assert r.split_a != r.split_b
 
 
 def test_cross_source_dup_matrix_attributes_pairs_to_source_pairs(spark):

@@ -275,37 +275,6 @@ def test_integrity_audit_counts_unmatched_sides(spark):
     assert (r.n_matched, r.n_order_only, r.n_item_only) == (2, 1, 1)
 
 
-def test_salted_join_matches_plain_join(spark):
-    """salted_join (replicate-small × salt-big): row-for-row equal to
-    the plain join for inner AND left (unmatched rows kept once), and
-    the shuffle actually clusters on (key, salt) so a hot key's rows
-    spread across reducers."""
-    from iot_real_time_data_pipeline_spark.functions.skew import salted_join
-
-    big = spark.createDataFrame(
-        [(1, i) for i in range(90)] + [(2, 900), (9, 999)],  # key 1 hot
-        "k long, payload long",
-    )
-    small = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "c"), (3, "d")], "sk long, tag string"
-    )
-    for how in ("inner", "left"):
-        plain = sorted(
-            (r.k, r.payload, r.tag)
-            for r in big.join(small, big["k"] == small["sk"], how)
-            .select("k", "payload", "tag").collect()
-        )
-        salted = salted_join(big, small, "k", "sk", salt_mod=4, how=how)
-        got = sorted(
-            (r.k, r.payload, r.tag)
-            for r in salted.select("k", "payload", "tag").collect()
-        )
-        assert got == plain, how
-    plan = plan_of(salted_join(big, small, "k", "sk", salt_mod=4))
-    ex = plan.split("Exchange hashpartitioning")
-    assert len(ex) > 1 and "_salt" in ex[1][:120], plan[:600]
-
-
 def test_salted_agg_matches_unsalted(spark):
     from iot_real_time_data_pipeline_spark.functions.skew import salted_agg
 

@@ -121,68 +121,6 @@ def test_join_size_audit_salt_recommendation(spark):
     assert r.strategy == "shuffle+salt"  # 90% of fact on one key
 
 
-def test_merge_into_lake_rewrites_only_matched_files(spark, tmp_path):
-    from iot_real_time_data_pipeline_spark.operators import maintenance as MN
-
-    root = str(tmp_path / "lake")
-    # three files with disjoint key ranges (footer min/max carry them)
-    for lo in (0, 100, 200):
-        spark.createDataFrame(
-            [(lo + i, f"v{lo + i}") for i in range(10)], "k long, v string"
-        ).coalesce(1).write.mode("append").parquet(root)
-    before = set(MN._parquet_files(root))
-    assert len(before) == 3
-
-    changes = spark.createDataFrame(
-        [("U", 103, "updated"), ("D", 107, None), ("I", 999, "new")],
-        "op string, k long, v string",
-    )
-    rep = MN.merge_into_lake(spark, root, changes, "k")
-    assert rep == {
-        "n_files_total": 3,
-        "n_files_rewritten": 1,   # only the 100-range file overlaps
-        "n_rows_updated": 1,
-        "n_rows_deleted": 1,
-        "n_rows_inserted": 1,
-    }
-    # the two untouched files are still there byte-identically (same paths)
-    after = set(MN._parquet_files(root))
-    assert len(before & after) == 2
-
-    got = {
-        r.k: r.v for r in spark.read.parquet(root).collect()
-    }
-    assert len(got) == 30  # 30 - 1 deleted + 1 inserted
-    assert got[103] == "updated"
-    assert 107 not in got
-    assert got[999] == "new"
-    assert got[0] == "v0" and got[205] == "v205"
-
-
-def test_merge_into_lake_whole_row_updates_and_del_precedence(spark, tmp_path):
-    """Updates replace the whole row (NULLs taken verbatim), and a key
-    present in both the update and delete batches is deleted — and
-    counted only as deleted."""
-    from iot_real_time_data_pipeline_spark.operators import maintenance as MN
-
-    root = str(tmp_path / "lake")
-    spark.createDataFrame(
-        [(i, f"v{i}") for i in range(5)], "k long, v string"
-    ).coalesce(1).write.mode("append").parquet(root)
-
-    changes = spark.createDataFrame(
-        [("U", 1, None), ("U", 2, "both"), ("D", 2, None)],
-        "op string, k long, v string",
-    )
-    rep = MN.merge_into_lake(spark, root, changes, "k")
-    assert rep["n_rows_updated"] == 1  # k=2 update superseded by delete
-    assert rep["n_rows_deleted"] == 1
-    got = {r.k: r.v for r in spark.read.parquet(root).collect()}
-    assert got[1] is None  # whole-row replace: NULL kept, not coalesced
-    assert 2 not in got
-    assert got[0] == "v0"
-
-
 def test_property_merge_upsert_matches_python_reference(spark):
     """Property: for ANY snapshot, the broadcast-planned MERGE equals a
     row-by-row Python application of the same mod-10 change rules."""

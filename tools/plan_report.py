@@ -87,7 +87,18 @@ def main() -> int:
 
 def plan_counters(spark, sf_dir: str, queries: dict) -> list[tuple[str, dict]]:
     """(name, counters) per query, in registry order. A query whose plan
-    fails to build gets ``{"error": <message>}`` in place of counters."""
+    fails to build gets ``{"error": <message>}`` in place of counters.
+
+    The counters are defined over plans built with the lake of
+    ``staging_from_lake`` already on disk and nothing cached: writing
+    that lake caches the flag frame, and a materialized cache prints its
+    final plan beside the initial one, doubling its counters. So the
+    lake is written (or found) first and the cache cleared, whatever
+    the temp dir holds."""
+    from iot_real_time_data_pipeline_spark.driver_queries import q_staging_from_lake
+
+    q_staging_from_lake(spark, sf_dir)
+    spark.catalog.clearCache()
     rows = []
     for name, fn in queries.items():
         try:
